@@ -262,8 +262,7 @@ object Bench {
   /** Warmup + timed medians for `names` in THIS JVM. */
   private def runInProcess(names: Seq[String], sfDir: String,
       passes: Int): Seq[(String, Double)] = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
 
     // runtime cardinality audit (join fanout + generate fanout +
     // exchange skew): a session listener sees EVERY execution —

@@ -6,6 +6,16 @@ import org.apache.spark.sql.SparkSession
   * semantics-relevant configs (UTC, AQE, ns-timestamp handling).
   */
 object GraftSession {
+
+  /** Task threads for a `main`'s session: `SPARK_GRAFT_CPUS` when set
+    * to a positive integer, else every core of this host. */
+  def cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A `local[cpus]` session with one shuffle partition per thread. */
+  def local(): SparkSession = { val n = cpus; build(s"local[$n]", n) }
+
   def build(master: String, shufflePartitions: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(master)

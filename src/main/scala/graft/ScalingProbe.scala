@@ -77,8 +77,7 @@ object ScalingProbe {
       decade3(args(1), args(2), args(3)); return
     }
     val Array(sfDir, bigDir, outMd) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     synthesize(spark, sfDir, bigDir)
 
     def exec(name: String, dir: String): Double = {
@@ -203,8 +202,7 @@ object ScalingProbe {
     *
     * Usage: ScalingProbe --decade2 <sfDir> <bigDir> <big2Dir> <out.md> */
   def decade2(sfDir: String, bigDir: String, big2Dir: String, outMd: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     synthesize(spark, sfDir, bigDir) // decade 1 must exist
     synthesizeDecade2(spark, sfDir, bigDir, big2Dir)
 
@@ -395,8 +393,7 @@ object ScalingProbe {
     *
     * Usage: ScalingProbe --decade3 <big2Dir> <big3Dir> <out.md> */
   def decade3(big2Dir: String, big3Dir: String, outMd: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     val Step = 2
     val marker = java.nio.file.Paths.get(big3Dir, "_SYNTH_COMPLETE_X2")
     if (!java.nio.file.Files.exists(marker)) {
@@ -508,7 +505,7 @@ object ScalingProbe {
     sb.append(s"Source: `$sfDir` -> synthesized `$bigDir` ")
     sb.append(s"($Shards near-duplicate-free shards of documents+embeddings; ")
     sb.append("all other tables 1x passthrough). Timing: warmup + min of 2, ")
-    sb.append("noop sink, cache cleared per run, local[32]. ")
+    sb.append(s"noop sink, cache cleared per run, local[${GraftSession.cpus}]. ")
     sb.append(s"Post-run loadavg: `$load`.\n\n")
     sb.append("Measured exponent = log10(t_10x / t_1x): 1.0 = linear in the ")
     sb.append("scaled tables, <1 sublinear, >1 super-linear (needs a plan fix ")

@@ -15,16 +15,7 @@ object SparkEntry {
     GenomicsQueries, SimilarityQueries, MultimodalQueries, GraphQueries,
     BpeQueries, SkewQueries, SketchQueries, QualityClassifierQueries,
     NgramLmQueries, LengthBatchingQueries, ZOrderQueries, MaxMatchQueries,
-    RelFuzzQueries, TemporalFuzzQueries, StringFuzzQueries, WindowSetFuzzQueries,
-    GroupingFuzzQueries, SubqueryFuzzQueries, ArrayFuzzQueries, JsonFuzzQueries,
-    NumericFuzzQueries, DateArithFuzzQueries, FloatFuzzQueries, TsArithFuzzQueries,
-    CastFuzzQueries, RegexFuzzQueries, StructFuzzQueries, MapFuzzQueries,
-    ComposedFuzzQueries, LimitFuzzQueries, ErrorFuzzQueries, TryFuzzQueries,
-    WindowNullsFuzzQueries, LateralFuzzQueries, RecursiveFuzzQueries,
-    BitwiseFuzzQueries, OrderedAggFuzzQueries, VariantFuzzQueries,
-    SignedZeroFuzzQueries, CollationFuzzQueries, IntervalFuzzQueries,
-    NtzFuzzQueries, StatsAggFuzzQueries, StringCollationFuzzQueries,
-    UnigramLmQueries, ExpectationsQueries, KCenterQueries)
+    FuzzQueries, UnigramLmQueries, ExpectationsQueries, KCenterQueries)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Resolution is memoized per (session, path) behind a freshness
   * signature: `spark.read.parquet` costs ~75–90 ms per call on this
   * host (file listing + parquet footer schema read + datasource
-  * resolution — measured by graft.tools.OptProbe), and every timed
+  * resolution — measured in OPTIMIZATION_r15.md), and every timed
   * bench exec paid it once per table. The memo stores the resolved
   * PLAN (an immutable DataFrame) — never data, never results; every
   * action still computes from parquet. A ~µs stat-signature of the

@@ -7,8 +7,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // the runtime cardinality audit (join/generate fanout + exchange
     // skew) rides the correctness dump too (same listener the bench

@@ -193,8 +193,7 @@ object CorpusCuration {
     * (atomic swap) and prints the funnel. */
   def main(args: Array[String]): Unit = {
     val Array(mode, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = graft.GraftSession.local()
     val docsDir = if (mode == "--demo") "/root/testdata/sf0.001" else mode
     val (curated, report) = run(graft.Tables.documents(spark, docsDir))
     graft.core.TableIO.writeAtomicSwap(curated, s"$outDir/curated.parquet")

@@ -80,8 +80,7 @@ object GisaidImport {
 
   def main(args: Array[String]): Unit = {
     val Array(mode, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     val (feedPath, existing, identifiers) =
       if (mode == "--demo") demoInputs(spark, outDir) else sys.error("only --demo wired")
     run(spark, feedPath, existing, identifiers, outDir)
@@ -105,9 +104,6 @@ object GisaidImport {
       s"import failed: ${report.failed} of ${report.processed} entries failed (>= 5%) — aborting before commit")
     TableIO.writeAtomicSwapAll(outputs.map { case (n, df) => (df, s"$outDir/$n") },
       s"$outDir/$SwapIntent")
-    outputs.foreach { case (name, _) =>
-      println(s"[gisaid] $name rows=${TableIO.read(spark, s"$outDir/$name").count()}")
-    }
     report
   }
 
@@ -136,11 +132,14 @@ object GisaidImport {
     // counts an entry as failed when its processing throws
     // (`BatchProcessingWorker.java` try/catch per entry); the frame
     // analog is a record whose REQUIRED values are null/empty after
-    // normalization. One pass computes both report counts.
+    // normalization, or whose sequence is not aligned to the reference
+    // (mutation calling in step 4 would throw on it). One pass computes
+    // both report counts.
     val normalized = normalizeFeed(spark, feed).withColumn("_invalid",
       col("gisaid_epi_isl").isNull || length(trim(col("gisaid_epi_isl"))) === 0 ||
         col("strain").isNull || length(trim(col("strain"))) === 0 ||
-        col("seq_aligned").isNull || length(col("seq_aligned")) === 0)
+        col("seq_aligned").isNull ||
+        length(col("seq_aligned")) =!= demoReference.length)
     val countsRow = normalized
       .agg(count(lit(1)).as("processed"),
         count(when(col("_invalid"), 1)).as("failed")).head()

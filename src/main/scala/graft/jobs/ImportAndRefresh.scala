@@ -34,8 +34,7 @@ object ImportAndRefresh {
   def main(args: Array[String]): Unit = {
     val Array(mode, dir) = args
     require(mode == "--demo", "only --demo wired")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     val outcomes = chain(spark, dir)
     spark.stop()
     if (outcomes.exists(o => o._2.tag == "failed" || o._2.tag == "blocked"))

@@ -99,8 +99,7 @@ object PretrainMix {
     * unpersist the gate path leaves to the bench's clearCache. */
   def main(args: Array[String]): Unit = {
     val Array(mode, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = graft.GraftSession.local()
     val docsDir = if (mode == "--demo") "/root/testdata/sf0.001" else mode
     import graft.operators.NgramLmQueries
     val docs = graft.Tables.documents(spark, docsDir)

@@ -18,8 +18,7 @@ object SpectrumRefresh {
 
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     run(spark, inDir, outDir)
     spark.stop()
   }
@@ -75,9 +74,6 @@ object SpectrumRefresh {
     TableIO.writeAtomicSwapAll(
       allViews.map { case (name, df) => (df, s"$outDir/$name") },
       s"$outDir/_swap_intent")
-    allViews.foreach { case (name, _) =>
-      println(s"[spectrum] $name rows=${TableIO.read(spark, s"$outDir/$name").count()}")
-    }
   }
 
   /** Armee marker derived from data, never synthesized: the import

@@ -81,8 +81,7 @@ object TrainingExport {
     * `documents.parquet`. */
   def main(args: Array[String]): Unit = {
     val Array(mode, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = graft.GraftSession.local()
     val docsDir = if (mode == "--demo") "/root/testdata/sf0.001" else mode
     writeExport(graft.Tables.documents(spark, docsDir), outDir)
     val back = spark.read.parquet(outDir)

@@ -33,8 +33,7 @@ object TrainingPipeline {
 
   def main(args: Array[String]): Unit = {
     val Array(mode, dir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     val docsDir = if (mode == "--demo") "/root/testdata/sf0.001" else mode
     val outcomes = chain(spark, docsDir, dir)
     spark.stop()

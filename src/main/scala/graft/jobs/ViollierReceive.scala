@@ -30,8 +30,7 @@ object ViollierReceive {
 
   def main(args: Array[String]): Unit = {
     val Array(mode, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     val dropDir = if (mode == "--demo") demoDropDir() else mode
 
     // 1. processed-file state (M9)
@@ -105,7 +104,6 @@ object ViollierReceive {
       state.set("viollier_receiver", processed.toSeq.sorted.mkString("\n"))
       println(s"[viollier] ${file.getName}: valid=${valid.count()} rejected=${rejected.count()}")
     }
-    println(s"[viollier] test_metadata rows=${TableIO.read(spark, s"$outDir/test_metadata").count()}")
     spark.stop()
   }
 

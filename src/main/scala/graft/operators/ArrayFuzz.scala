@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -53,7 +53,7 @@ import scala.util.Random
   * index and a negative (from-end) index each appear throughout the
   * population.
   */
-object ArrayFuzz {
+object ArrayFuzz extends FuzzExec.Frames {
 
   val NQueries = 60
   val GateSeed = 20260817L
@@ -338,7 +338,7 @@ object ArrayFuzz {
       s"SELECT $key AS k, sort_array(collect_list($elemSql)) AS arr FROM $table$w GROUP BY $key",
       s"SELECT $key AS k, list_sort(list($elemSql), 'ASC', 'NULLS FIRST') AS arr FROM $table$w GROUP BY $key",
       (s, d) => {
-        val raw = FuzzExec.table(s, d, table)
+        val raw = Tables.t(s, d, table)
         val f = whereSql.fold(raw)(p => raw.filter(p))
         f.groupBy(expr(key).as("k")).agg(sort_array(collect_list(expr(elemSql))).as("arr"))
       },
@@ -351,7 +351,7 @@ object ArrayFuzz {
     BaseMeta(table,
       s"SELECT $key AS k, $arrSparkSql AS arr FROM $table WHERE $whereSql",
       s"SELECT $key AS k, $arrDuckSql AS arr FROM $table WHERE $whereSql",
-      (s, d) => FuzzExec.table(s, d, table).filter(whereSql)
+      (s, d) => Tables.t(s, d, table).filter(whereSql)
         .select(expr(key).as("k"), arrDf.as("arr")),
       intElems, pos)
 
@@ -383,7 +383,7 @@ object ArrayFuzz {
   // ---- query shape ----
 
   final case class AQuery(id: Int, base: BaseMeta, outs: Seq[AOut],
-      outNames: Seq[String]) {
+      outNames: Seq[String]) extends FuzzExec.Generated {
     def outCols: Seq[String] = "k" +: outNames
     def sparkSql: String =
       s"WITH base AS (${base.sparkCte}) SELECT k, ${outs.map(_.sparkSql).mkString(", ")} FROM base"
@@ -393,7 +393,7 @@ object ArrayFuzz {
       base.dfb(spark, dir).select(col("k") +: outs.map(_.df): _*)
   }
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[AQuery] =
+  def queries(seed: Long, n: Int): Seq[AQuery] =
     (0 until n).map(i => gen(i, new Random(seed + i)))
 
   private def gen(id: Int, rnd: Random): AQuery = {
@@ -452,57 +452,17 @@ object ArrayFuzz {
     AQuery(id, b, outs, outs.indices.map(j => s"o_$j"))
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: AQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = AQuery
 
-  def fingerprint(q: AQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: AQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz7 — the array / higher-order-function differential gate. */
-object ArrayFuzzQueries extends QueryModule {
-  private val fz7 = Q(
+  /** q_fz7 — the array / higher-order-function differential gate. */
+  def gate: Q = declare(
     "q_fz7_array_fuzz",
-    s"array/HOF differential fuzz: ${ArrayFuzz.NQueries} seeded transform/filter/" +
+    s"array/HOF differential fuzz: $NQueries seeded transform/filter/" +
       "aggregate/sort/slice/zip queries over grouped, literal and split arrays, " +
-      "dual-rendered from one AST, fingerprint-compared Spark vs DuckDB",
-    (s, d) => ArrayFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(ArrayFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz7)
+      "dual-rendered from one AST, fingerprint-compared Spark vs DuckDB")
 }

@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -35,7 +32,7 @@ import scala.util.Random
   * No arm is order-sensitive (pure scalar maps and whole-table /
   * grouped aggregates), so the tables may include lineitem — the
   * tied-key hazard does not reach this population. */
-object BitwiseFuzz {
+object BitwiseFuzz extends FuzzExec.Views {
 
   val NQueries = 28
   val GateSeed = 20261101L
@@ -51,12 +48,12 @@ object BitwiseFuzz {
     BTable("customer", "c_custkey", Seq("c_nationkey", "c_custkey"),
       Seq("c_mktsegment = 'BUILDING'", "c_custkey % 2 = 0")))
 
-  private def sparkView(t: String) = s"__fz24_$t"
+  protected def sparkView(t: String) = s"__fz24_$t"
 
   final case class BQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[BQuery] =
+  def queries(seed: Long, n: Int): Seq[BQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 509 + i)))
 
   /** A bitwise scalar expression tree over residue-bounded BIGINT
@@ -176,64 +173,18 @@ object BitwiseFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
+  type Query = BQuery
 
-  def fingerprint(spark: SparkSession, q: BQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz24 — the bitwise + aggregate-FILTER differential gate. */
-object BitwiseFuzzQueries extends QueryModule {
-  private val fz24 = Q(
+  /** q_fz24 — the bitwise + aggregate-FILTER differential gate. */
+  def gate: Q = declare(
     "q_fz24_bitwise_fuzz",
-    s"bitwise + FILTER-clause fuzz: ${BitwiseFuzz.NQueries} seeded " +
+    s"bitwise + FILTER-clause fuzz: $NQueries seeded " +
       "bit-operator expression trees (&, |, xor, ~, shifts, bit_count), " +
       "bit_and/bit_or/bit_xor and bool aggregates, and agg FILTER (WHERE) " +
       "incl. DISTINCT and grouped forms, dual-rendered (DuckDB xor() vs " +
-      "Spark ^), fingerprint-compared",
-    (s, d) => BitwiseFuzz.fingerprintAll(s, d),
-    Some(BitwiseFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz24)
+      "Spark ^), fingerprint-compared")
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -38,7 +38,7 @@ import scala.util.Random
   *  - English-word booleans: Spark parses `'yes'/'no'`, DuckDB NULL;
   *  - non-ISO date separators: DuckDB parses `2024/02/29`, Spark NULL.
   */
-object CastFuzz {
+object CastFuzz extends FuzzExec.Frames {
 
   val NQueries = 45
   val GateSeed = 20260823L
@@ -179,8 +179,11 @@ object CastFuzz {
 
   final case class CQuery(id: Int, table: String, commonSql: String,
       df: (SparkSession, String) => DataFrame, outCols: Seq[String])
+      extends FuzzExec.Generated {
+    def duckSql: String = commonSql
+  }
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[CQuery] =
+  def queries(seed: Long, n: Int): Seq[CQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 271 + i)))
 
   private def gen(id: Int, rnd: Random): CQuery = {
@@ -207,7 +210,7 @@ object CastFuzz {
     val sql = s"SELECT ${outs.map(_.sql).mkString(", ")} FROM ${t.name}" +
       where.fold("")(p => s" WHERE ${p._1}")
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       val f = where.fold(raw)(p => raw.filter(p._2))
       f.select(outs.map(_.df): _*)
     }
@@ -255,7 +258,7 @@ object CastFuzz {
     val sql = s"SELECT (${key.sql}) AS g_0, ${aggDefs.map(_._1).mkString(", ")}" +
       s" FROM ${t.name} GROUP BY 1"
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       raw.groupBy(key.df.as("g_0"))
         .agg(aggDefs.head._2, aggDefs.tail.map(_._2): _*)
         .select(outCols.map(col): _*)
@@ -263,57 +266,17 @@ object CastFuzz {
     CQuery(id, t.name, sql, dfFn, outCols)
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: CQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = CQuery
 
-  def fingerprint(q: CQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: CQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz13 — the cast/coercion differential gate. */
-object CastFuzzQueries extends QueryModule {
-  private val fz13 = Q(
+  /** q_fz13 — the cast/coercion differential gate. */
+  def gate: Q = declare(
     "q_fz13_cast_fuzz",
-    s"cast/coercion differential fuzz: ${CastFuzz.NQueries} seeded try_cast round-trips " +
+    s"cast/coercion differential fuzz: $NQueries seeded try_cast round-trips " +
       "between string and bigint/smallint/decimal/double/boolean/date/timestamp with " +
-      "malformed/whitespace/overflow arms, fingerprint-compared Spark vs DuckDB",
-    (s, d) => CastFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(CastFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz13)
+      "malformed/whitespace/overflow arms, fingerprint-compared Spark vs DuckDB")
 }

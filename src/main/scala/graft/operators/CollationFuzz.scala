@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -36,7 +33,7 @@ import scala.util.Random
   * keyed on a numeric residue guarantees every source string appears
   * in multiple casings, so a binary-equality bug (grouping 'URGENT'
   * apart from 'urgent') flips counts, not just representatives. */
-object CollationFuzz {
+object CollationFuzz extends FuzzExec.Views {
 
   /** 0–23: the UTF8_LCASE ↔ NOCASE half; 24–29: the
     * UTF8_BINARY_RTRIM half (trailing-space-insensitive equality —
@@ -66,12 +63,12 @@ object CollationFuzz {
     CTable("customer", "c_custkey", "c_nationkey",
       Seq("c_mktsegment", "substring(c_name, 1, 12)")))
 
-  private def sparkView(t: String) = s"__fz28_$t"
+  protected def sparkView(t: String) = s"__fz28_$t"
 
   final case class CQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[CQuery] =
+  def queries(seed: Long, n: Int): Seq[CQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 733 + i)))
 
   /** The dialect split: Spark types the collation onto the value,
@@ -449,58 +446,16 @@ object CollationFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
+  type Query = CQuery
 
-  def fingerprint(spark: SparkSession, q: CQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz28 — the collation differential gate. */
-object CollationFuzzQueries extends QueryModule {
-  private val fz28 = Q(
+  /** q_fz28 — the collation differential gate. */
+  def gate: Q = declare(
     "q_fz28_collation",
-    s"collation fuzz: ${CollationFuzz.NQueries} seeded queries — " +
+    s"collation fuzz: $NQueries seeded queries — " +
       "case-mangled strings under UTF8_LCASE (DuckDB COLLATE NOCASE, " +
       "probed lowercase-then-binary-equivalent on ASCII) through " +
       "collated GROUP BY / JOIN / DISTINCT / predicates / rank, an " +
@@ -511,9 +466,5 @@ object CollationFuzzQueries extends QueryModule {
       "DESC) on per-template case variants, both probed vs DuckDB's " +
       "icu 'en' before being compensated ICU-free; string exits " +
       "lower()/rtrim()-normalized (representative choice is " +
-      "engine-internal)",
-    (s, d) => CollationFuzz.fingerprintAll(s, d),
-    Some(CollationFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz28)
+      "engine-internal)")
 }

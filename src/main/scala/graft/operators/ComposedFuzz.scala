@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -57,7 +57,7 @@ import scala.util.Random
   * where Double accumulation is order-dependent) for the in-JVM
   * rule-ON ≡ rule-OFF property — the variant that would have caught
   * the round-10 hole mechanically. */
-object ComposedFuzz {
+object ComposedFuzz extends FuzzExec.Frames {
 
   val NQueries = 40
   val GateSeed = 20260907L
@@ -103,7 +103,7 @@ object ComposedFuzz {
       s"CAST($gi % $gm AS BIGINT) AS g, $vSql AS v, CAST($wi % 97 AS BIGINT) AS w " +
       s"FROM ${t.name}" + where.fold("")(w => s" WHERE $w")
     val build = (sp: SparkSession, d: String) => {
-      val raw = FuzzExec.table(sp, d, t.name)
+      val raw = Tables.t(sp, d, t.name)
       val f = where.fold(raw)(w => raw.filter(expr(w)))
       f.select(t.uniqueKeyDf.cast(LongType).as("k"),
         (col(gi) % gm).cast(LongType).as("g"), vDf.as("v"),
@@ -289,9 +289,11 @@ object ComposedFuzz {
 
   final case class CQuery(id: Int, commonSql: String,
       df: (SparkSession, String) => DataFrame, outCols: Seq[String],
-      avgHazardSql: Option[String])
+      avgHazardSql: Option[String]) extends FuzzExec.Generated {
+    def duckSql: String = commonSql
+  }
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[CQuery] =
+  def queries(seed: Long, n: Int): Seq[CQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 487 + i)))
 
   private def gen(id: Int, rnd: Random): CQuery = {
@@ -343,59 +345,18 @@ object ComposedFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: CQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(org.apache.spark.sql.types.StringType),
-        lit(RelFuzz.NullSentinel))): _*)
+  type Query = CQuery
 
-  def fingerprint(q: CQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: CQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz17 — the composed-plan differential gate. */
-object ComposedFuzzQueries extends QueryModule {
-  private val fz17 = Q(
+  /** q_fz17 — the composed-plan differential gate. */
+  def gate: Q = declare(
     "q_fz17_composed_fuzz",
-    s"composed-plan differential fuzz: ${ComposedFuzz.NQueries} seeded 3-level " +
+    s"composed-plan differential fuzz: $NQueries seeded 3-level " +
       "compositions (window / set-op / final-agg over join / GROUP BY / " +
       "GROUPING SETS / membership-filter over projected leaves) incl. both " +
-      "quadratic-hazard frame directions, fingerprint-compared Spark vs DuckDB",
-    (s, d) => ComposedFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(ComposedFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz17)
+      "quadratic-hazard frame directions, fingerprint-compared Spark vs DuckDB")
 }

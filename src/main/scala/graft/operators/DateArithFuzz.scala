@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DateType, IntegerType, LongType}
 
 import java.sql.Date
 import scala.util.Random
@@ -52,7 +52,7 @@ import scala.util.Random
   * and every day-difference is < 5000, so `sum(diff % k)` stays far
   * from BIGINT overflow at any SF.
   */
-object DateArithFuzz {
+object DateArithFuzz extends FuzzExec.Frames {
 
   val NQueries = 60
   val GateSeed = 20260819L
@@ -320,8 +320,9 @@ object DateArithFuzz {
   final case class DQuery(id: Int, table: String,
       sparkSql: String, duckSql: String,
       df: (SparkSession, String) => DataFrame, outCols: Seq[String])
+      extends FuzzExec.Generated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[DQuery] =
+  def queries(seed: Long, n: Int): Seq[DQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 977 + i)))
 
   private def gen(id: Int, rnd: Random): DQuery = {
@@ -339,7 +340,7 @@ object DateArithFuzz {
       s"SELECT ${outs.map(render).mkString(", ")} FROM ${t.name}" +
         where.fold("")(p => s" WHERE ${renderP(p)}")
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       val f = where.fold(raw)(p => raw.filter(p.df))
       f.select(outs.map(_.df): _*)
     }
@@ -393,7 +394,7 @@ object DateArithFuzz {
         havingGt.fold("")(k => s" HAVING count(*) > $k")
     }
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       val f = where.fold(raw)(p => raw.filter(p.df))
       val grouped = f.groupBy(keys.zipWithIndex.map { case ((_, _, c), j) => c.as(s"g_$j") }: _*)
       val agged = grouped.agg(aggs.head.df,
@@ -405,57 +406,17 @@ object DateArithFuzz {
       sql(_._2, _.duckSql, _.duckSql), dfFn, outCols)
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: DQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = DQuery
 
-  def fingerprint(q: DQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: DQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz10 — the date-arithmetic differential gate. */
-object DateArithFuzzQueries extends QueryModule {
-  private val fz10 = Q(
+  /** q_fz10 — the date-arithmetic differential gate. */
+  def gate: Q = declare(
     "q_fz10_datearith_fuzz",
-    s"date-arithmetic differential fuzz: ${DateArithFuzz.NQueries} seeded interval/" +
+    s"date-arithmetic differential fuzz: $NQueries seeded interval/" +
       "clamp/last_day/trunc/make_date/datediff queries, dual-rendered from one AST, " +
-      "fingerprint-compared Spark vs DuckDB",
-    (s, d) => DateArithFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(DateArithFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz10)
+      "fingerprint-compared Spark vs DuckDB")
 }

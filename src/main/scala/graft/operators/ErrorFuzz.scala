@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Q
 
 import scala.util.Random
 
@@ -75,7 +74,7 @@ import scala.util.Random
   * population must error and ~half must answer (pinned in the
   * spec) — an all-error population would never test value agreement,
   * an all-answer one never error agreement. */
-object ErrorFuzz {
+object ErrorFuzz extends FuzzExec.Outcomes {
 
   val NQueries = 48
   val GateSeed = 20260915L
@@ -119,16 +118,16 @@ object ErrorFuzz {
   /** Spark reads the gate tables under private view names so the gate
     * never races another module's views; the DuckDB oracle addresses
     * the driver-registered real names. */
-  private def sparkView(t: String) = s"__fz19_$t"
+  protected def sparkView(t: String) = s"__fz19_$t"
 
   /** One generated query: raw Spark SQL (may error), the DuckDB
     * must-error predicate (never errors), the DuckDB guarded twin
-    * (never errors; value-equal to Spark whenever Spark answers), and
-    * the output columns both sides canonicalize over. */
+    * `duckSql` (never errors; value-equal to Spark whenever Spark
+    * answers), and the output columns both sides canonicalize over. */
   final case class EQuery(id: Int, sparkSql: String, duckErrPred: String,
-      duckGuarded: String, outCols: Seq[String])
+      duckSql: String, outCols: Seq[String]) extends FuzzExec.ErrGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[EQuery] =
+  def queries(seed: Long, n: Int): Seq[EQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 521 + i)))
 
   private def gen(id: Int, rnd: Random): EQuery = {
@@ -509,96 +508,23 @@ object ErrorFuzz {
     }
   }
 
-  // ---- Spark-side outcomes (the gate's left half) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  /** Walks the cause chain for a SparkThrowable error condition. */
-  private def condition(t: Throwable, depth: Int = 0): Option[String] = t match {
-    case null => None
-    case _ if depth > 12 => None
-    case st: org.apache.spark.SparkThrowable if st.getCondition != null =>
-      Some(st.getCondition)
-    case other => condition(other.getCause, depth + 1)
-  }
+  type Query = EQuery
 
-  /** Runs one raw query: Right((n_rows, checksum)) when it answers,
-    * Left(condition) when it raises a whitelisted ANSI error; any
-    * other failure propagates (harness bugs must not count as
-    * "errored"). */
-  def outcome(spark: SparkSession, q: EQuery): Either[String, (Long, Long)] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{LongType, StringType}
-    try {
-      val canon = concat_ws("|", q.outCols.map(c =>
-        coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-      val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-        .agg(count(lit(1)).cast(LongType).as("n"),
-          coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-        .head()
-      Right((r.getLong(0), r.getLong(1)))
-    } catch {
-      case e: Throwable =>
-        condition(e).filter(ExpectedConditions.contains) match {
-          case Some(cond) => Left(cond)
-          case None => throw e
-        }
-    }
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  /** The gate frame: one row per query — (qid, errored, n_rows,
-    * checksum), sentinels (-1, -1) when errored. Queries evaluate
-    * against private temp views over the sf dir. */
-  def outcomes(spark: SparkSession, dir: String): DataFrame = {
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        outcome(spark, q) match {
-          case Left(_) => (q.id.toLong, 1L, -1L, -1L)
-          case Right((n, h)) => (q.id.toLong, 0L, n, h)
-        }
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "errored", "n_rows", "checksum")
-  }
+  protected def expected(condition: String): Boolean =
+    ExpectedConditions.contains(condition)
 
-  // ---- DuckDB oracle (the gate's right half) ----
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, __e.err AS errored,
-         |  CASE WHEN __e.err = 1 THEN -1 ELSE __f.n_rows END AS n_rows,
-         |  CASE WHEN __e.err = 1 THEN -1 ELSE __f.checksum END AS checksum
-         |FROM (SELECT ${q.duckErrPred} AS err) __e CROSS JOIN
-         |  (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         |    CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |  FROM (SELECT $canon AS __c FROM (${q.duckGuarded}) __q) __cq) __f""".stripMargin
-    }
-    s"SELECT qid, errored, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz19 — the ANSI error-agreement differential gate. */
-object ErrorFuzzQueries extends QueryModule {
-  private val fz19 = Q(
+  /** q_fz19 — the ANSI error-agreement differential gate. */
+  def gate: Q = declare(
     "q_fz19_error_fuzz",
-    s"ANSI error-agreement fuzz: ${ErrorFuzz.NQueries} seeded queries " +
+    s"ANSI error-agreement fuzz: $NQueries seeded queries " +
       "(sum-overflow agg/window/tail incl. the round-11 suppression fixture " +
       "and its k-PRECEDING/k-FOLLOWING twins, invalid/overflowing casts incl. " +
       "dates and narrow decimals, div-mod-by-zero, element_at OOB/zero/" +
       "variable-index) gated on DOES-IT-ERROR vs an analytic DuckDB oracle " +
       "(HUGEINT partial-sum checks, guarded twins for the non-error " +
-      "fingerprints)",
-    (s, d) => ErrorFuzz.outcomes(s, d),
-    Some(ErrorFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz19)
+      "fingerprints)")
 }

@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import scala.util.Random
 
@@ -45,7 +45,7 @@ import scala.util.Random
   *  - division is NEVER generated (Spark ANSI throws on x/0; and
   *    quotients leave the binary-fraction grid).
   */
-object FloatFuzz {
+object FloatFuzz extends FuzzExec.Frames {
 
   val NQueries = 50
   val GateSeed = 20260821L
@@ -215,8 +215,11 @@ object FloatFuzz {
 
   final case class FQuery(id: Int, table: String, commonSql: String,
       df: (SparkSession, String) => DataFrame, outCols: Seq[String])
+      extends FuzzExec.Generated {
+    def duckSql: String = commonSql
+  }
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[FQuery] =
+  def queries(seed: Long, n: Int): Seq[FQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 613 + i)))
 
   private def gen(id: Int, rnd: Random): FQuery = {
@@ -237,7 +240,7 @@ object FloatFuzz {
         s"${encSql(e.sql)} AS o_$j" }.mkString(", ")} FROM ${t.name}" +
       where.fold("")(p => s" WHERE ${p._1}")
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       val f = where.fold(raw)(p => raw.filter(p._2))
       f.select(outs.zipWithIndex.map { case (e, j) => encDf(e.df).as(s"o_$j") }: _*)
     }
@@ -280,7 +283,7 @@ object FloatFuzz {
       s" FROM ($inner) __i GROUP BY v" +
       havingGt.fold("")(k => s" HAVING count(*) > $k")
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       val f = where.fold(raw)(p => raw.filter(p._2))
       val inner0 = f.select(v.df.as("v"), w.df.as("w"))
       val agged = inner0.groupBy(col("v"))
@@ -307,10 +310,10 @@ object FloatFuzz {
         s"JOIN (SELECT DISTINCT ${bv.sql} AS v FROM ${bt.name}) b ON a.v = b.v " +
         "GROUP BY a.v"
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       val f = where.fold(raw)(p => raw.filter(p._2))
       val a = f.select(av.df.as("v"))
-      val b = FuzzExec.table(s, d, bt.name)
+      val b = Tables.t(s, d, bt.name)
         .select(bv.df.as("v")).distinct()
       a.join(b, Seq("v")).groupBy(col("v"))
         .agg(count(lit(1)).cast(LongType).as("a_0"))
@@ -319,57 +322,17 @@ object FloatFuzz {
     FQuery(id, t.name, sql, dfFn, outCols)
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: FQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = FQuery
 
-  def fingerprint(q: FQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: FQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz11 — the IEEE special-value differential gate. */
-object FloatFuzzQueries extends QueryModule {
-  private val fz11 = Q(
+  /** q_fz11 — the IEEE special-value differential gate. */
+  def gate: Q = declare(
     "q_fz11_float_fuzz",
-    s"IEEE special-value differential fuzz: ${FloatFuzz.NQueries} seeded NaN/±Inf/−0.0 " +
+    s"IEEE special-value differential fuzz: $NQueries seeded NaN/±Inf/−0.0 " +
       "grouping/join/comparison/aggregate queries, every double exiting through the " +
-      "sentinel encoder, fingerprint-compared Spark vs DuckDB",
-    (s, d) => FloatFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(FloatFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz11)
+      "sentinel encoder, fingerprint-compared Spark vs DuckDB")
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -36,7 +36,7 @@ import scala.util.Random
   * construction paths — which is exactly what the property spec wants
   * to compare.
   */
-object GroupingFuzz {
+object GroupingFuzz extends FuzzExec.Frames {
 
   val NQueries = 60
   val GateSeed = 20260815L
@@ -148,7 +148,8 @@ object GroupingFuzz {
   final case class GQuery(id: Int, table: String, whereSql: Option[String],
       whereDf: Option[Column], keys: Seq[(String, Column)], mode: GMode,
       flagKey: Option[Int], aggs: Seq[(String, Column)],
-      aggInputs: Seq[(String, Column)]) {
+      aggInputs: Seq[(String, Column)]) extends FuzzExec.Generated {
+    def duckSql: String = commonSql
 
     def outCols: Seq[String] =
       keys.indices.map(i => s"g_$i") ++ Seq("gid") ++
@@ -174,7 +175,7 @@ object GroupingFuzz {
     }
 
     def df(spark: SparkSession, dir: String): DataFrame = {
-      val raw = FuzzExec.table(spark, dir, table)
+      val raw = Tables.t(spark, dir, table)
       val filtered = whereDf.fold(raw)(raw.filter)
       // pre-project keys to NAMED columns (see the scaladoc constraint)
       // plus the raw agg-input columns
@@ -197,7 +198,7 @@ object GroupingFuzz {
 
   // ---- the seeded population ----
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[GQuery] =
+  def queries(seed: Long, n: Int): Seq[GQuery] =
     (0 until n).map { i => gen(i, new Random(seed + i)) }
 
   private def gen(id: Int, rnd: Random): GQuery = {
@@ -292,59 +293,17 @@ object GroupingFuzz {
     Seq((c, col(c)))
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  import org.apache.spark.sql.types.StringType
+  type Query = GQuery
 
-  private def canonDf(q: GQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprint(q: GQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
-
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: GQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz5 — the multi-level-aggregate differential gate. */
-object GroupingFuzzQueries extends QueryModule {
-  private val fz5 = Q(
+  /** q_fz5 — the multi-level-aggregate differential gate. */
+  def gate: Q = declare(
     "q_fz5_grouping_fuzz",
-    s"grouping-sets differential fuzz: ${GroupingFuzz.NQueries} seeded ROLLUP / CUBE / " +
+    s"grouping-sets differential fuzz: $NQueries seeded ROLLUP / CUBE / " +
       "GROUPING SETS queries with grouping_id flags, nullable keys, DISTINCT and " +
-      "conditional aggregates, fingerprint-compared Spark vs DuckDB",
-    (s, d) => GroupingFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(GroupingFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz5)
+      "conditional aggregates, fingerprint-compared Spark vs DuckDB")
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Q
 
 import scala.util.Random
 
@@ -49,25 +48,25 @@ import scala.util.Random
   * shape. Partitions are residue-bounded to keep the deliberate
   * quadratic trivial, and only orders/customer appear (unique keys —
   * lineitem has none and tied ROWS frames legitimately diverge). */
-object IntervalFuzz {
+object IntervalFuzz extends FuzzExec.Outcomes {
 
   val NQueries = 24
   val GateSeed = 20261401L
 
   /** Spark raw query; DuckDB must-it-error predicate (scalar 0/1
-    * subquery) + guarded integer-space twin. */
+    * subquery) + guarded integer-space twin `duckSql`. */
   final case class IQuery(id: Int, sparkSql: String, duckErrPred: String,
-      duckGuarded: String, outCols: Seq[String])
+      duckSql: String, outCols: Seq[String]) extends FuzzExec.ErrGenerated
 
   private final case class ITable(name: String, key: String, num: String)
   private def tables = Seq(
     ITable("orders", "o_orderkey", "o_custkey"),
     ITable("customer", "c_custkey", "c_nationkey"))
 
-  private def sparkView(t: String) = s"__fz29_$t"
+  protected def sparkView(t: String) = s"__fz29_$t"
   private def noErr = "(SELECT CAST(0 AS BIGINT))"
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[IQuery] =
+  def queries(seed: Long, n: Int): Seq[IQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 827 + i)))
 
   /** HALF_UP integer division for non-negative x (HUGEINT-safe). */
@@ -220,96 +219,25 @@ object IntervalFuzz {
     }
   }
 
-  // ---- Spark-side outcomes (the ErrorFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private val ExpectedPrefixes = Seq(
-    "INTERVAL_ARITHMETIC_OVERFLOW", "ARITHMETIC_OVERFLOW")
+  type Query = IQuery
 
-  private def condition(t: Throwable, depth: Int = 0): Option[String] = t match {
-    case null => None
-    case _ if depth > 12 => None
-    case st: org.apache.spark.SparkThrowable if st.getCondition != null =>
-      Some(st.getCondition)
-    case other => condition(other.getCause, depth + 1)
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  /** Right((n, checksum)) when the query answers; Left(condition) on a
-    * whitelisted interval-overflow error; anything else rethrows. */
-  def outcome(spark: SparkSession, q: IQuery): Either[String, (Long, Long)] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{LongType, StringType}
-    try {
-      val canon = concat_ws("|", q.outCols.map(c =>
-        coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-      val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-        .agg(count(lit(1)).cast(LongType).as("n"),
-          coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-        .head()
-      Right((r.getLong(0), r.getLong(1)))
-    } catch {
-      case e: Throwable =>
-        condition(e).filter(c => ExpectedPrefixes.exists(c.startsWith)) match {
-          case Some(cond) => Left(cond)
-          case None => throw e
-        }
-    }
-  }
+  /** The interval-overflow family (the ErrorFuzz discipline). */
+  protected def expected(condition: String): Boolean =
+    Seq("INTERVAL_ARITHMETIC_OVERFLOW", "ARITHMETIC_OVERFLOW")
+      .exists(condition.startsWith)
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
-
-  /** Gate frame: (qid, errored, n_rows, checksum); (-1, -1) sentinels
-    * when errored. */
-  def outcomes(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        outcome(spark, q) match {
-          case Left(_) => (q.id.toLong, 1L, -1L, -1L)
-          case Right((n, h)) => (q.id.toLong, 0L, n, h)
-        }
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "errored", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, __e.err AS errored,
-         |  CASE WHEN __e.err = 1 THEN -1 ELSE __f.n_rows END AS n_rows,
-         |  CASE WHEN __e.err = 1 THEN -1 ELSE __f.checksum END AS checksum
-         |FROM (SELECT ${q.duckErrPred} AS err) __e CROSS JOIN
-         |  (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         |    CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |  FROM (SELECT $canon AS __c FROM (${q.duckGuarded}) __q) __cq) __f""".stripMargin
-    }
-    s"SELECT qid, errored, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz29 — the ANSI interval differential gate. */
-object IntervalFuzzQueries extends QueryModule {
-  private val fz29 = Q(
+  /** q_fz29 — the ANSI interval differential gate. */
+  def gate: Q = declare(
     "q_fz29_interval",
-    s"ANSI interval fuzz: ${IntervalFuzz.NQueries} seeded queries over " +
+    s"ANSI interval fuzz: $NQueries seeded queries over " +
       "day-time + year-month intervals — sum/min/max aggregates, " +
       "HALF_UP micros division/multiplication (unix_micros exit), " +
       "date+interval arithmetic, window interval sums incl. the " +
       "rewrite-excluded tail frame, and INTERVAL_ARITHMETIC_OVERFLOW " +
       "must-error arms (fz19 discipline: DuckDB has no sum(INTERVAL), " +
-      "so the oracle is exact HUGEINT integer arithmetic)",
-    (s, d) => IntervalFuzz.outcomes(s, d),
-    Some(IntervalFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz29)
+      "so the oracle is exact HUGEINT integer arithmetic)")
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -34,7 +34,7 @@ import scala.util.Random
   *    spelling parses in both engines — so the ANSI cast can never
   *    throw on the NULL/malformed arms.
   */
-object JsonFuzz {
+object JsonFuzz extends FuzzExec.Frames {
 
   val NQueries = 50
   val GateSeed = 20260818L
@@ -64,7 +64,7 @@ object JsonFuzz {
     JBase(name,
       s"SELECT $key AS k, $docSql AS j FROM $table WHERE $whereSql",
       s"SELECT $key AS k, $docSql AS j FROM $table WHERE $whereSql",
-      (s, d) => FuzzExec.table(s, d, table).filter(whereSql)
+      (s, d) => Tables.t(s, d, table).filter(whereSql)
         .select(expr(key).as("k"), docDf.as("j")),
       paths, missing, malformed)
 
@@ -147,7 +147,7 @@ object JsonFuzz {
         "list_sort(list(concat('{\"q\":', CAST(l_linenumber AS STRING), " +
         "',\"p\":', CAST(l_partkey % 100 AS STRING), '}')), 'ASC', 'NULLS FIRST'), ','), ']}') AS j " +
         "FROM lineitem WHERE l_orderkey % 5 = 0 GROUP BY l_orderkey",
-      (s, d) => FuzzExec.table(s, d, "lineitem")
+      (s, d) => Tables.t(s, d, "lineitem")
         .filter("l_orderkey % 5 = 0")
         .groupBy(col("l_orderkey").as("k"))
         .agg(concat(lit("{\"lines\":["),
@@ -194,7 +194,7 @@ object JsonFuzz {
   // ---- query shape ----
 
   final case class JQuery(id: Int, base: JBase, outs: Seq[JOut],
-      outNames: Seq[String]) {
+      outNames: Seq[String]) extends FuzzExec.Generated {
     def outCols: Seq[String] = "k" +: outNames
     def sparkSql: String =
       s"WITH base AS (${base.sparkCte}) SELECT k, ${outs.map(_.sparkSql).mkString(", ")} FROM base"
@@ -204,7 +204,7 @@ object JsonFuzz {
       base.dfb(spark, dir).select(col("k") +: outs.map(_.df): _*)
   }
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[JQuery] =
+  def queries(seed: Long, n: Int): Seq[JQuery] =
     (0 until n).map(i => gen(i, new Random(seed + i)))
 
   private def gen(id: Int, rnd: Random): JQuery = {
@@ -232,60 +232,18 @@ object JsonFuzz {
     JQuery(id, b, outs, outs.indices.map(j => s"o_$j"))
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  import org.apache.spark.sql.types.LongType
+  type Query = JQuery
 
-  private def canonDf(q: JQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprint(q: JQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
-
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: JQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz8 — the JSON-path differential gate. */
-object JsonFuzzQueries extends QueryModule {
-  private val fz8 = Q(
+  /** q_fz8 — the JSON-path differential gate. */
+  def gate: Q = declare(
     "q_fz8_json_fuzz",
-    s"JSON-path differential fuzz: ${JsonFuzz.NQueries} seeded queries over " +
+    s"JSON-path differential fuzz: $NQueries seeded queries over " +
       "concat-constructed documents (nested objects, variable arrays, JSON null, " +
       "a guaranteed malformed arm) extracted via get_json_object vs " +
-      "json_extract_string, fingerprint-compared Spark vs DuckDB",
-    (s, d) => JsonFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(JsonFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz8)
+      "json_extract_string, fingerprint-compared Spark vs DuckDB")
 }

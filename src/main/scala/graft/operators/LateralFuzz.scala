@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -37,17 +34,17 @@ import scala.util.Random
   * subquery by its unique key so the LIMIT-k set is total-order
   * determined; row laterals emit the inner key itself, making the
   * output multiset join-determined with no order sensitivity. */
-object LateralFuzz {
+object LateralFuzz extends FuzzExec.Views {
 
   val NQueries = 32
   val GateSeed = 20261019L
 
-  private def sparkView(t: String) = s"__fz22_$t"
+  protected def sparkView(t: String) = s"__fz22_$t"
 
   final case class LQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[LQuery] =
+  def queries(seed: Long, n: Int): Seq[LQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 307 + i)))
 
   /** Outer/inner table pairs with a real FK-ish correlation and a
@@ -150,64 +147,18 @@ object LateralFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- Seq("orders", "customer"))
-      FuzzExec.table(spark, dir, t)
-        .createOrReplaceTempView(sparkView(t))
+  type Query = LQuery
 
-  def fingerprint(spark: SparkSession, q: LQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = Seq("orders", "customer")
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz22 — the LATERAL subquery differential gate. */
-object LateralFuzzQueries extends QueryModule {
-  private val fz22 = Q(
+  /** q_fz22 — the LATERAL subquery differential gate. */
+  def gate: Q = declare(
     "q_fz22_lateral_fuzz",
-    s"LATERAL subquery fuzz: ${LateralFuzz.NQueries} seeded FROM-clause " +
+    s"LATERAL subquery fuzz: $NQueries seeded FROM-clause " +
       "laterals — scalar chains, correlated ungrouped aggregates (DuckDB " +
       "twin LEFT JOIN LATERAL, compensating its comma-form no-match drop), " +
       "row laterals under CROSS and LEFT multiplicity, top-k-per-outer-row, " +
-      "GROUP BY inside the lateral — fingerprint-compared Spark vs DuckDB",
-    (s, d) => LateralFuzz.fingerprintAll(s, d),
-    Some(LateralFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz22)
+      "GROUP BY inside the lateral — fingerprint-compared Spark vs DuckDB")
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.LongType
 
 import scala.util.Random
 
@@ -31,7 +31,7 @@ import scala.util.Random
   * OFFSET beyond the row count (id%7==3), LIMIT above the row count
   * (id%7==4), standalone OFFSET (id%7==5), nullable leading order
   * key (id%2==0). */
-object LimitFuzz {
+object LimitFuzz extends FuzzExec.Frames {
 
   val NQueries = 35
   val GateSeed = 20260911L
@@ -104,8 +104,11 @@ object LimitFuzz {
 
   final case class LQuery(id: Int, commonSql: String,
       df: (SparkSession, String) => DataFrame, outCols: Seq[String])
+      extends FuzzExec.Generated {
+    def duckSql: String = commonSql
+  }
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[LQuery] =
+  def queries(seed: Long, n: Int): Seq[LQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 509 + i)))
 
   private def gen(id: Int, rnd: Random): LQuery = {
@@ -140,7 +143,7 @@ object LimitFuzz {
       where.fold("")(w => s" WHERE $w") +
       s" ORDER BY ${s1.sql}, ${s2.sql}, ${t.uk}, ${t.strs.head}$lim"
     val dfFn = (sp: SparkSession, d: String) => {
-      val raw = FuzzExec.table(sp, d, t.name)
+      val raw = Tables.t(sp, d, t.name)
       val f = where.fold(raw)(w => raw.filter(expr(w)))
       limDf(f.orderBy(s1.df, s2.df, t.ukDf.asc, col(t.strs.head).asc)
         .select(t.ukDf.cast(LongType).as("o_0"),
@@ -160,7 +163,7 @@ object LimitFuzz {
       s"CAST(sum($v % 1000) AS BIGINT) AS a_0, CAST(count(*) AS BIGINT) AS a_1 " +
       s"FROM ${t.name} GROUP BY 1 ORDER BY a_0 $dir NULLS FIRST, g_0$lim"
     val dfFn = (sp: SparkSession, d: String) => {
-      val raw = FuzzExec.table(sp, d, t.name)
+      val raw = Tables.t(sp, d, t.name)
       val agged = raw.groupBy(g.df.cast(LongType).as("g_0"))
         .agg(sum(col(v) % 1000).cast(LongType).as("a_0"),
           count(lit(1)).cast(LongType).as("a_1"))
@@ -188,7 +191,7 @@ object LimitFuzz {
       s"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS o_1 " +
       s"FROM ${t.name} ORDER BY o_1 DESC NULLS LAST, o_0$lim"
     val dfFn = (sp: SparkSession, d: String) => {
-      val raw = FuzzExec.table(sp, d, t.name)
+      val raw = Tables.t(sp, d, t.name)
       val w = Window.partitionBy(g.df)
         .orderBy(t.ukDf.asc_nulls_first, (col(v) % 100).asc_nulls_first)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -212,7 +215,7 @@ object LimitFuzz {
     val sql = s"SELECT CAST(count(*) AS BIGINT) AS a_0, " +
       s"CAST(coalesce(sum(x), 0) AS BIGINT) AS a_1 FROM ($inner) __i"
     val dfFn = (sp: SparkSession, d: String) => {
-      val raw = FuzzExec.table(sp, d, t.name)
+      val raw = Tables.t(sp, d, t.name)
       val innerDf = limDf(raw.orderBy(s1.df, t.ukDf.asc, (col(v) % 1000).asc)
         .select((col(v) % 1000).cast(LongType).as("x")))
       innerDf.agg(count(lit(1)).cast(LongType).as("a_0"),
@@ -221,59 +224,19 @@ object LimitFuzz {
     LQuery(id, sql, dfFn, Seq("a_0", "a_1"))
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: LQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = LQuery
 
-  def fingerprint(q: LQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: LQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz18 — the ORDER BY + LIMIT/OFFSET differential gate. */
-object LimitFuzzQueries extends QueryModule {
-  private val fz18 = Q(
+  /** q_fz18 — the ORDER BY + LIMIT/OFFSET differential gate. */
+  def gate: Q = declare(
     "q_fz18_limit_fuzz",
-    s"top-k differential fuzz: ${LimitFuzz.NQueries} seeded ORDER BY + " +
+    s"top-k differential fuzz: $NQueries seeded ORDER BY + " +
       "LIMIT/OFFSET queries (plain / agg top-k / windowed top-k / " +
       "limit-before-outer-agg) with id-cycled LIMIT 0, OFFSET-beyond, " +
       "LIMIT-beyond and standalone-OFFSET arms, total orders throughout, " +
-      "fingerprint-compared Spark vs DuckDB",
-    (s, d) => LimitFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(LimitFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz18)
+      "fingerprint-compared Spark vs DuckDB")
 }

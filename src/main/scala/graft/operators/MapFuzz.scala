@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -54,7 +54,7 @@ import scala.util.Random
   *    (`{"a":1}` vs `{a=1}`) → outputs are always scalars or joined
   *    key/value strings.
   */
-object MapFuzz {
+object MapFuzz extends FuzzExec.Frames {
 
   val NQueries = 40
   val GateSeed = 20260901L
@@ -147,9 +147,9 @@ object MapFuzz {
 
   final case class MQuery(id: Int, table: String, sparkSql: String,
       duckSql: String, df: (SparkSession, String) => DataFrame,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.Generated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[MQuery] =
+  def queries(seed: Long, n: Int): Seq[MQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 467 + i)))
 
   private def gen(id: Int, rnd: Random): MQuery = {
@@ -196,10 +196,10 @@ object MapFuzz {
         s"coalesce(array_to_string(list_transform(list_filter(map_entries(${me.duckSql}), e -> e.value % $c = $r), e -> e.key), ','), '')",
         coalesce(array_join(map_keys(map_filter(me.df,
           (_, v) => v % c === r)), ","), lit("")), "o_0"),
-      (s"coalesce(array_join(transform(map_values(${me.sparkSql}), x -> coalesce(CAST(x AS STRING), '${RelFuzz.NullSentinel}')), ','), '')",
-        s"coalesce(array_to_string(list_transform(map_values(${me.duckSql}), x -> coalesce(CAST(x AS VARCHAR), '${RelFuzz.NullSentinel}')), ','), '')",
+      (s"coalesce(array_join(transform(map_values(${me.sparkSql}), x -> coalesce(CAST(x AS STRING), '$NullSentinel')), ','), '')",
+        s"coalesce(array_to_string(list_transform(map_values(${me.duckSql}), x -> coalesce(CAST(x AS VARCHAR), '$NullSentinel')), ','), '')",
         coalesce(array_join(transform(map_values(me.df),
-          x => coalesce(x.cast(StringType), lit(RelFuzz.NullSentinel))), ","),
+          x => coalesce(x.cast(StringType), lit(NullSentinel))), ","),
           lit("")), "o_1"),
       (s"CAST(cardinality(${me.sparkSql}) AS BIGINT)",
         s"CAST(cardinality(${me.duckSql}) AS BIGINT)",
@@ -238,11 +238,11 @@ object MapFuzz {
     val (c, r) = if (id % 8 == 3) (2, 5) else (2 + rnd.nextInt(3), 0)
     val where = whereClause(t, rnd)
     val proj = Seq(
-      (s"coalesce(array_join(transform(map_values(transform_values(${me.sparkSql}, (k, v) -> v * $mul + $add)), x -> coalesce(CAST(x AS STRING), '${RelFuzz.NullSentinel}')), ','), '')",
-        s"coalesce(array_to_string(list_transform(map_values(${me.duckSql}), x -> coalesce(CAST(x * $mul + $add AS VARCHAR), '${RelFuzz.NullSentinel}')), ','), '')",
+      (s"coalesce(array_join(transform(map_values(transform_values(${me.sparkSql}, (k, v) -> v * $mul + $add)), x -> coalesce(CAST(x AS STRING), '$NullSentinel')), ','), '')",
+        s"coalesce(array_to_string(list_transform(map_values(${me.duckSql}), x -> coalesce(CAST(x * $mul + $add AS VARCHAR), '$NullSentinel')), ','), '')",
         coalesce(array_join(transform(map_values(transform_values(me.df,
           (_, v) => v * mul + add)),
-          x => coalesce(x.cast(StringType), lit(RelFuzz.NullSentinel))), ","),
+          x => coalesce(x.cast(StringType), lit(NullSentinel))), ","),
           lit("")), "o_0"),
       (s"CAST(cardinality(map_from_entries(filter(map_entries(${me.sparkSql}), e -> e.value % $c = $r))) AS BIGINT)",
         s"CAST(cardinality(map_from_entries(list_filter(map_entries(${me.duckSql}), e -> e.value % $c = $r))) AS BIGINT)",
@@ -266,65 +266,25 @@ object MapFuzz {
     val dfFn = (sp: SparkSession, d: String) => {
       // spread: per-row map/HOF work is the gate's whole cost and the
       // input is a single-row-group file — see FuzzExec.spreadNoCache
-      val raw = FuzzExec.spreadNoCache(sp, FuzzExec.table(sp, d, t.name))
+      val raw = FuzzExec.spreadNoCache(sp, Tables.t(sp, d, t.name))
       val f = where.fold(raw)(w => raw.filter(w._2))
       f.select(proj.map(p => p._3.as(p._4)): _*)
     }
     MQuery(id, t.name, sparkSql, duckSql, dfFn, outCols)
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: MQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = MQuery
 
-  def fingerprint(q: MQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: MQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz16 — the map differential gate. */
-object MapFuzzQueries extends QueryModule {
-  private val fz16 = Q(
+  /** q_fz16 — the map differential gate. */
+  def gate: Q = declare(
     "q_fz16_map_fuzz",
-    s"map differential fuzz: ${MapFuzz.NQueries} seeded construction/lookup/" +
+    s"map differential fuzz: $NQueries seeded construction/lookup/" +
       "keys-values/concat/HOF queries over string- and BIGINT-keyed maps, " +
       "dual-rendered, scalar or joined-string outputs, fingerprint-compared " +
-      "Spark vs DuckDB",
-    (s, d) => MapFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(MapFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz16)
+      "Spark vs DuckDB")
 }

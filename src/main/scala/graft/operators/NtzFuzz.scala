@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -39,7 +36,7 @@ import scala.util.Random
   * `Literal(Long, DayTimeIntervalType)`) — tie-insensitive by
   * construction, so the dates' tied wall-clocks are safe without a
   * unique key. */
-object NtzFuzz {
+object NtzFuzz extends FuzzExec.Views {
 
   val NQueries = 24
   val GateSeed = 20261501L
@@ -55,12 +52,12 @@ object NtzFuzz {
       "date_add(DATE '1993-06-01', CAST(c_custkey % 1461 AS INT))",
       "(DATE '1993-06-01' + CAST(c_custkey % 1461 AS INT))"))
 
-  private def sparkView(t: String) = s"__fz30_$t"
+  protected def sparkView(t: String) = s"__fz30_$t"
 
   final case class NQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[NQuery] =
+  def queries(seed: Long, n: Int): Seq[NQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 937 + i)))
 
   /** The NTZ value under test and its DuckDB naive twin. */
@@ -150,65 +147,19 @@ object NtzFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
+  type Query = NQuery
 
-  def fingerprint(spark: SparkSession, q: NQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz30 — the TIMESTAMP_NTZ differential gate. */
-object NtzFuzzQueries extends QueryModule {
-  private val fz30 = Q(
+  /** q_fz30 — the TIMESTAMP_NTZ differential gate. */
+  def gate: Q = declare(
     "q_fz30_timestamp_ntz",
-    s"TIMESTAMP_NTZ fuzz: ${NtzFuzz.NQueries} seeded queries over " +
+    s"TIMESTAMP_NTZ fuzz: $NQueries seeded queries over " +
       "wall-clock timestamps (oracle: DuckDB's naive TIMESTAMP) — " +
       "casts to STRING/DATE, field extraction (DOW off-by-one " +
       "compensated), comparisons, date_trunc grouping (Spark's NTZ " +
       "date_trunc returns session-zoned TIMESTAMP — a pinned quirk), " +
-      "interval-bounded RANGE frames over NTZ keys, timestampadd/diff",
-    (s, d) => NtzFuzz.fingerprintAll(s, d),
-    Some(NtzFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz30)
+      "interval-bounded RANGE frames over NTZ keys, timestampadd/diff")
 }

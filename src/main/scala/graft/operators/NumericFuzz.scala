@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
@@ -55,7 +55,7 @@ import scala.util.Random
   * tracking bounds every scaled sum ≤ ~6·10¹⁷ at sf0.1 (ANSI overflow
   * never fires) and every truncated-mean numerator < 2⁵³.
   */
-object NumericFuzz {
+object NumericFuzz extends FuzzExec.Frames {
 
   val NQueries = 50
   val GateSeed = 20260817L
@@ -306,8 +306,11 @@ object NumericFuzz {
 
   final case class NQuery(id: Int, table: String, commonSql: String,
       df: (SparkSession, String) => DataFrame, outCols: Seq[String])
+      extends FuzzExec.Generated {
+    def duckSql: String = commonSql
+  }
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[NQuery] =
+  def queries(seed: Long, n: Int): Seq[NQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 131 + i)))
 
   private def gen(id: Int, rnd: Random): NQuery = {
@@ -346,7 +349,7 @@ object NumericFuzz {
       intPair.zipWithIndex.map { case ((s, _), j) => s"$s AS i_$j" }).mkString(", ")
     val sql = s"SELECT $sel FROM ${t.name}${where.fold("")(w => s" WHERE ${w._1}")}"
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       val f = where.fold(raw)(w => raw.filter(w._2))
       f.select((exprs.zipWithIndex.map { case (e, j) => normDf(e).as(s"c_$j") } ++
         intPair.zipWithIndex.map { case ((_, c), j) => c.as(s"i_$j") }).toIndexedSeq: _*)
@@ -405,7 +408,7 @@ object NumericFuzz {
       s" GROUP BY ${keys.indices.map(_ + 1).mkString(", ")}" +
       having.fold("")(h => s" ${h._2}")
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       val f = where.fold(raw)(w => raw.filter(w._2))
       val grouped = f.groupBy(keys.zipWithIndex.map { case ((_, c), j) => c.as(s"g_$j") }: _*)
       val aggCols = aggs.map(_.df)
@@ -418,59 +421,17 @@ object NumericFuzz {
     NQuery(id, t.name, sql, dfFn, outCols)
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  import org.apache.spark.sql.types.StringType
+  type Query = NQuery
 
-  private def canonDf(q: NQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprint(q: NQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
-
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: NQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz9 — the exact-numeric differential gate. */
-object NumericFuzzQueries extends QueryModule {
-  private val fz9 = Q(
+  /** q_fz9 — the exact-numeric differential gate. */
+  def gate: Q = declare(
     "q_fz9_numeric_fuzz",
-    s"exact-numeric differential fuzz: ${NumericFuzz.NQueries} seeded decimal-arithmetic / " +
+    s"exact-numeric differential fuzz: $NQueries seeded decimal-arithmetic / " +
       "rounding / div-mod-sign queries, outputs normalized to scaled BIGINT, " +
-      "fingerprint-compared Spark vs DuckDB",
-    (s, d) => NumericFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(NumericFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz9)
+      "fingerprint-compared Spark vs DuckDB")
 }

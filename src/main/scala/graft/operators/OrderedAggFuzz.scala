@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -34,7 +31,7 @@ import scala.util.Random
   * independent one would be engine-dependent under ties and is never
   * generated. ASCII-only emissions keep the two engines' default
   * string orders identical (no collation surface). */
-object OrderedAggFuzz {
+object OrderedAggFuzz extends FuzzExec.Views {
 
   val NQueries = 24
   val GateSeed = 20261109L
@@ -49,12 +46,12 @@ object OrderedAggFuzz {
     OTable("customer", Seq("c_nationkey", "c_custkey"),
       Seq("c_mktsegment = 'BUILDING'", "c_custkey % 2 = 0")))
 
-  private def sparkView(t: String) = s"__fz25_$t"
+  protected def sparkView(t: String) = s"__fz25_$t"
 
   final case class OQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[OQuery] =
+  def queries(seed: Long, n: Int): Seq[OQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 613 + i)))
 
   private def gen(id: Int, rnd: Random): OQuery = {
@@ -118,63 +115,17 @@ object OrderedAggFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
+  type Query = OQuery
 
-  def fingerprint(spark: SparkSession, q: OQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz25 — the ordered-aggregate differential gate. */
-object OrderedAggFuzzQueries extends QueryModule {
-  private val fz25 = Q(
+  /** q_fz25 — the ordered-aggregate differential gate. */
+  def gate: Q = declare(
     "q_fz25_ordered_agg_fuzz",
-    s"ordered-aggregate fuzz: ${OrderedAggFuzz.NQueries} seeded listagg " +
+    s"ordered-aggregate fuzz: $NQueries seeded listagg " +
       "WITHIN GROUP / percentile_disc / ordered-list-collection queries " +
       "under the emit-f(order-key) tie discipline, dual-rendered (DuckDB " +
-      "string_agg ORDER BY, list(e ORDER BY e)), fingerprint-compared",
-    (s, d) => OrderedAggFuzz.fingerprintAll(s, d),
-    Some(OrderedAggFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz25)
+      "string_agg ORDER BY, list(e ORDER BY e)), fingerprint-compared")
 }

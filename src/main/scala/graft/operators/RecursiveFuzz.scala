@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -42,17 +39,17 @@ import scala.util.Random
   *
   * The only dialect split is the string cast (Spark `AS STRING`,
   * DuckDB `AS VARCHAR`); everything else renders from one template. */
-object RecursiveFuzz {
+object RecursiveFuzz extends FuzzExec.Views {
 
   val NQueries = 28
   val GateSeed = 20261027L
 
-  private def sparkView(t: String) = s"__fz23_$t"
+  protected def sparkView(t: String) = s"__fz23_$t"
 
   final case class RQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[RQuery] =
+  def queries(seed: Long, n: Int): Seq[RQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 401 + i)))
 
   private val preds = Map(
@@ -144,64 +141,18 @@ object RecursiveFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- Seq("orders", "customer"))
-      FuzzExec.table(spark, dir, t)
-        .createOrReplaceTempView(sparkView(t))
+  type Query = RQuery
 
-  def fingerprint(spark: SparkSession, q: RQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = Seq("orders", "customer")
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz23 — the RECURSIVE CTE differential gate. */
-object RecursiveFuzzQueries extends QueryModule {
-  private val fz23 = Q(
+  /** q_fz23 — the RECURSIVE CTE differential gate. */
+  def gate: Q = declare(
     "q_fz23_recursive_fuzz",
-    s"RECURSIVE CTE fuzz: ${RecursiveFuzz.NQueries} seeded UNION ALL " +
+    s"RECURSIVE CTE fuzz: $NQueries seeded UNION ALL " +
       "recursions — data-seeded linear recurrences, depth-bounded graph " +
       "closure over orders-derived edges, hierarchy walks with anchor " +
       "multiplicity, string accumulation — fingerprint-compared Spark vs " +
-      "DuckDB",
-    (s, d) => RecursiveFuzz.fingerprintAll(s, d),
-    Some(RecursiveFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz23)
+      "DuckDB")
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -42,7 +42,7 @@ import scala.util.Random
   *  - replacement backreferences (`$1` vs `\1`) → replacements are
   *    literal strings only.
   */
-object RegexFuzz {
+object RegexFuzz extends FuzzExec.Frames {
 
   val NQueries = 45
   val GateSeed = 20260824L
@@ -154,9 +154,9 @@ object RegexFuzz {
 
   final case class RQuery(id: Int, table: String, sparkSql: String,
       duckSql: String, df: (SparkSession, String) => DataFrame,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.Generated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[RQuery] =
+  def queries(seed: Long, n: Int): Seq[RQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 757 + i)))
 
   private def gen(id: Int, rnd: Random): RQuery = {
@@ -191,7 +191,7 @@ object RegexFuzz {
     val duckSql = s"SELECT ${outs.map(_.duckSql).mkString(", ")} FROM ${t.name}" +
       where.fold("")(p => s" WHERE ${p._2}")
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       val f = where.fold(raw)(p => raw.filter(p._3))
       f.select(outs.map(_.df): _*)
     }
@@ -247,7 +247,7 @@ object RegexFuzz {
     val duckSql = s"SELECT ($kDuck) AS g_0, ${aggs.map(_._2).mkString(", ")}" +
       s" FROM ${t.name} GROUP BY 1"
     val dfFn = (s: SparkSession, d: String) => {
-      val raw = FuzzExec.table(s, d, t.name)
+      val raw = Tables.t(s, d, t.name)
       raw.groupBy(kDf.as("g_0"))
         .agg(aggs.head._3, aggs.tail.map(_._3): _*)
         .select(outCols.map(col): _*)
@@ -255,57 +255,17 @@ object RegexFuzz {
     RQuery(id, t.name, sparkSql, duckSql, dfFn, outCols)
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: RQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = RQuery
 
-  def fingerprint(q: RQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: RQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz14 — the regex differential gate. */
-object RegexFuzzQueries extends QueryModule {
-  private val fz14 = Q(
+  /** q_fz14 — the regex differential gate. */
+  def gate: Q = declare(
     "q_fz14_regex_fuzz",
-    s"regex differential fuzz: ${RegexFuzz.NQueries} seeded match/extract/replace/count " +
+    s"regex differential fuzz: $NQueries seeded match/extract/replace/count " +
       "queries over the probed Java-regex ∩ RE2 common syntax, dual-rendered, " +
-      "fingerprint-compared Spark vs DuckDB",
-    (s, d) => RegexFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(RegexFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz14)
+      "fingerprint-compared Spark vs DuckDB")
 }

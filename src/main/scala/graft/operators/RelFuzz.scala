@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.LongType
 
 import scala.util.Random
 
@@ -43,19 +43,10 @@ import scala.util.Random
   * discipline is integer/string exactness (floats are never
   * hash-compared anywhere in this repo).
   */
-object RelFuzz {
+object RelFuzz extends FuzzExec.Frames {
 
-  /** Population size: the property suite and the gate both run the
-    * full population. */
   val NQueries = 150
-
-  /** Gate seed — changing it rotates the whole population. */
   val GateSeed = 20260814L
-
-  /** Σ(hash % ModP) over ≤ millions of rows stays far inside BIGINT. */
-  val ModP = 1000003L
-
-  val NullSentinel = "<NULL>"
 
   // ---- catalog: the Spark∩DuckDB-safe columns (no doubles/timestamps)
   private final case class Col(name: String, num: Boolean)
@@ -167,7 +158,8 @@ object RelFuzz {
       distinct: Boolean,
       exprCols: Seq[ExprCol] = Seq.empty, // extra computed projections
       having: Option[(Agg, Long)] = None, // (member of aggs, threshold): agg > v
-      orderLimit: Option[Int] = None) { // ORDER BY <all out cols> LIMIT k
+      orderLimit: Option[Int] = None) // ORDER BY <all out cols> LIMIT k
+      extends FuzzExec.Generated {
 
     /** Output column names, in order. */
     def outCols: Seq[String] =
@@ -199,12 +191,14 @@ object RelFuzz {
           .getOrElse("")
     }
 
+    def duckSql: String = commonSql
+
     private def edgesUsed: Seq[(String, String, String, String)] =
       joinEdgesFor(tables)
 
     /** Rendering 1: the DataFrame plan over parquet at `dir`. */
     def df(spark: SparkSession, dir: String): DataFrame =
-      df(spark, (t: String) => FuzzExec.table(spark, dir, t))
+      df(spark, (t: String) => Tables.t(spark, dir, t))
 
     /** Same plan built through a caller-supplied table resolver, so one
       * gate invocation resolves each parquet table once (one file
@@ -253,7 +247,7 @@ object RelFuzz {
   // ---- generator --------------------------------------------------------
 
   /** The seeded population: a pure function of `seed`. */
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[FuzzQuery] = {
+  def queries(seed: Long, n: Int): Seq[FuzzQuery] = {
     val rnd = new Random(seed)
     (0 until n).map(i => genOne(i, rnd))
   }
@@ -412,74 +406,20 @@ object RelFuzz {
     }
   }
 
-  // ---- fingerprint reductions ------------------------------------------
+  // ---- the gate (run by FuzzExec) ----
 
-  /** Canonical row string: every output column cast to string with an
-    * explicit NULL sentinel (concat_ws silently drops nulls, which
-    * would alias rows), '|'-joined in column order. */
-  private def canonDf(q: FuzzQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(NullSentinel))): _*)
+  type Query = FuzzQuery
 
-  /** Reduce one query's frame to (qid, n_rows, checksum). */
-  def fingerprint(q: FuzzQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  /** The whole population reduced — the gate frame. Each generated
-    * query runs as its OWN Spark job (from a driver thread pool) and
-    * contributes exactly one bounded (qid, n_rows, checksum) row,
-    * assembled into a local frame. NOT a 100-branch unionAll plan:
-    * Catalyst analysis/optimization of the mega-union dominated the
-    * gate's cost (~0.26 s/branch, 26 s at sf0.1) while per-branch data
-    * is trivial; 100 small plans optimize independently and the
-    * driver-side collect is 100 rows by construction. */
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: FuzzQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown() // no thread leak on a failing query
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  /** DuckDB twin of [[fingerprint]]+[[fingerprintAll]]: one UNION ALL
-    * branch per query, over the same canonical string. */
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '$NullSentinel')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % $ModP), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** The driver-facing differential gate: Spark runs every generated
-  * query from its DataFrame rendering; DuckDB runs the same queries
-  * from the common-dialect SQL rendering; both reduce to the same
-  * 100-row fingerprint frame. A hash mismatch on any row is a
-  * semantics divergence in that generated query. */
-object RelFuzzQueries extends QueryModule {
-  private val fz1 = Q(
+  /** The differential gate: Spark runs every generated
+    * query from its DataFrame rendering; DuckDB runs the same queries
+    * from the common-dialect SQL rendering; both reduce to the same
+    * 100-row fingerprint frame. A hash mismatch on any row is a
+    * semantics divergence in that generated query. */
+  def gate: Q = declare(
     "q_fz1_relational_fuzz",
-    s"differential fuzz: ${RelFuzz.NQueries} seeded random filter/join/agg/expr/having/limit " +
-      "compositions, fingerprint-compared Spark vs DuckDB",
-    (s, d) => RelFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(RelFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz1)
+    s"differential fuzz: $NQueries seeded random filter/join/agg/expr/having/limit " +
+      "compositions, fingerprint-compared Spark vs DuckDB")
 }

@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -60,7 +57,7 @@ import scala.util.Random
   * quadratic frame — partitions are residue-bounded (≤ ~300 rows at
   * sf0.1) to keep O(n²) per partition trivial — and the values must
   * match DuckDB bit-exactly through the string exit. */
-object SignedZeroFuzz {
+object SignedZeroFuzz extends FuzzExec.Views {
 
   val NQueries = 24
   val GateSeed = 20261201L
@@ -78,12 +75,12 @@ object SignedZeroFuzz {
     ZTable("orders", "o_orderkey", Seq("o_custkey", "o_orderkey")),
     ZTable("customer", "c_custkey", Seq("c_nationkey", "c_custkey")))
 
-  private def sparkView(t: String) = s"__fz27_$t"
+  protected def sparkView(t: String) = s"__fz27_$t"
 
   final case class ZQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[ZQuery] =
+  def queries(seed: Long, n: Int): Seq[ZQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 641 + i), mixed = false))
 
   /** The spec-only mixed-sign half: ±0.0 planted from data through the
@@ -174,67 +171,21 @@ object SignedZeroFuzz {
       Seq("k", "a_0"))
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
+  type Query = ZQuery
 
-  def fingerprint(spark: SparkSession, q: ZQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz27 — the signed-zero identity differential gate. */
-object SignedZeroFuzzQueries extends QueryModule {
-  private val fz27 = Q(
+  /** q_fz27 — the signed-zero identity differential gate. */
+  def gate: Q = declare(
     "q_fz27_signed_zero",
-    s"signed-zero identity fuzz: ${SignedZeroFuzz.NQueries} seeded " +
+    s"signed-zero identity fuzz: $NQueries seeded " +
       "window min/max queries over doubles with uniform-sign zeros " +
       "planted among values, all four frame shapes (running/sliding/" +
       "tail/RANGE) over total orders, exited through CAST(x AS STRING) " +
       "— the one exit that shows the sign bit the sentinel encodings " +
       "erase; the mixed-sign half is spec-gated rule-ON ≡ rule-OFF " +
       "(equal-representative choice is engine-internal past DuckDB's " +
-      "segment-tree threshold, probed)",
-    (s, d) => SignedZeroFuzz.fingerprintAll(s, d),
-    Some(SignedZeroFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz27)
+      "segment-tree threshold, probed)")
 }

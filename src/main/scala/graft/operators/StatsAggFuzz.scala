@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -53,7 +50,7 @@ import scala.util.Random
   * per group, variance > 0 since the value residues cycle), and corr
   * arms derive x and y from DIFFERENT residues so neither is constant
   * and the denominator never vanishes. */
-object StatsAggFuzz {
+object StatsAggFuzz extends FuzzExec.Views {
 
   val NQueries = 24
   val GateSeed = 20261601L
@@ -64,12 +61,12 @@ object StatsAggFuzz {
     STable("customer", "c_custkey", "c_nationkey"),
     STable("lineitem", "l_orderkey", "l_suppkey"))
 
-  private def sparkView(t: String) = s"__fz31_$t"
+  protected def sparkView(t: String) = s"__fz31_$t"
 
   final case class SQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[SQuery] =
+  def queries(seed: Long, n: Int): Seq[SQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 1013 + i)))
 
   /** |agg − ref| ≤ 1e-9·max(1,|ref|) rendered per dialect (only the
@@ -182,66 +179,20 @@ object StatsAggFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
+  type Query = SQuery
 
-  def fingerprint(spark: SparkSession, q: SQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz31 — the statistical-aggregate differential gate. */
-object StatsAggFuzzQueries extends QueryModule {
-  private val fz31 = Q(
+  /** q_fz31 — the statistical-aggregate differential gate. */
+  def gate: Q = declare(
     "q_fz31_stats_agg",
-    s"statistical-aggregate fuzz: ${StatsAggFuzz.NQueries} seeded " +
+    s"statistical-aggregate fuzz: $NQueries seeded " +
       "queries — median/percentile_cont value-exact on the dyadic 1/8 " +
       "grid, mode with planted strict majorities, and the variance/" +
       "covariance/correlation/regression family gated as epsilon-" +
       "identity booleans against exact integer-sum rationals (each " +
       "engine vs its own formula — last-ulp accumulation differences " +
-      "make raw values unhashable, probed)",
-    (s, d) => StatsAggFuzz.fingerprintAll(s, d),
-    Some(StatsAggFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz31)
+      "make raw values unhashable, probed)")
 }

@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -80,7 +77,7 @@ import scala.util.Random
   * Pad diversity is planted on a residue of the key INDEPENDENT of
   * the case-mangling residue, so all nine case×pad combinations
   * appear (the fz28 composite discipline). */
-object StringCollationFuzz {
+object StringCollationFuzz extends FuzzExec.Views {
 
   val NQueries = 42
   val GateSeed = 20261701L
@@ -100,12 +97,12 @@ object StringCollationFuzz {
       Seq("BU", "ma", "Fu", "Cust"),
       Seq("ING", "ery", "olD", "1", "5")))
 
-  private def sparkView(t: String) = s"__fz32_$t"
+  protected def sparkView(t: String) = s"__fz32_$t"
 
   final case class SQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[SQuery] =
+  def queries(seed: Long, n: Int): Seq[SQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 911 + i)))
 
   /** Case-mangled haystack (the fz28 discipline). */
@@ -392,58 +389,16 @@ object StringCollationFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
+  type Query = SQuery
 
-  def fingerprint(spark: SparkSession, q: SQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz32 — the collation-aware string-function differential gate. */
-object StringCollationFuzzQueries extends QueryModule {
-  private val fz32 = Q(
+  /** q_fz32 — the collation-aware string-function differential gate. */
+  def gate: Q = declare(
     "q_fz32_collated_strfuncs",
-    s"collated string-function fuzz: ${StringCollationFuzz.NQueries} " +
+    s"collated string-function fuzz: $NQueries " +
       "seeded queries — contains/startswith/endswith/LIKE predicates, " +
       "instr/locate positions, replace/split_part rewrites, trim-set/" +
       "IN/array membership, matching through UTF8_LCASE or UNICODE_CI " +
@@ -455,9 +410,5 @@ object StringCollationFuzzQueries extends QueryModule {
       "UNICODE_CI_RTRIM) — search/equality rtrim BOTH operands then " +
       "match ci (probed), oracle composes rtrim(lower()); replace " +
       "never trims (probed), trim-set/split_part ride pad-free " +
-      "subjects; LIKE+regexp rejected under both composites (pinned)",
-    (s, d) => StringCollationFuzz.fingerprintAll(s, d),
-    Some(StringCollationFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz32)
+      "subjects; LIKE+regexp rejected under both composites (pinned)")
 }

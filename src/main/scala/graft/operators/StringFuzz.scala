@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.LongType
 
 import scala.util.Random
 
@@ -25,7 +25,7 @@ import scala.util.Random
   * `expr(sql)` — the property suite would otherwise prove nothing),
   * the common SQL parses in both engines, DuckDB checksums gate it.
   */
-object StringFuzz {
+object StringFuzz extends FuzzExec.Frames {
 
   val NQueries = 60
   val GateSeed = 20260814L
@@ -76,7 +76,8 @@ object StringFuzz {
 
   final case class SQuery(id: Int, table: String, key: String,
       exprs: Seq[(String, SExpr)], predSql: Option[String],
-      predDf: Option[Column], distinct: Boolean) {
+      predDf: Option[Column], distinct: Boolean) extends FuzzExec.Generated {
+    def duckSql: String = commonSql
 
     def outCols: Seq[String] = Seq(key) ++ exprs.map(_._1)
 
@@ -88,7 +89,7 @@ object StringFuzz {
     }
 
     def df(spark: SparkSession, dir: String): DataFrame = {
-      val base = FuzzExec.table(spark, dir, table)
+      val base = Tables.t(spark, dir, table)
       val filtered = predDf.map(base.filter).getOrElse(base)
       val proj = filtered.select(
         (Seq(col(key)) ++ exprs.map { case (a, e) => e.df.as(a) }).toIndexedSeq: _*)
@@ -97,7 +98,7 @@ object StringFuzz {
   }
 
   /** The seeded population: a pure function of `seed`. */
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[SQuery] = {
+  def queries(seed: Long, n: Int): Seq[SQuery] = {
     val rnd = new Random(seed)
     (0 until n).map(i => genOne(i, rnd))
   }
@@ -151,56 +152,16 @@ object StringFuzz {
       distinct = rnd.nextInt(100) < 50)
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: SQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = SQuery
 
-  def fingerprint(q: SQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: SQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz3 — the string-function differential gate. */
-object StringFuzzQueries extends QueryModule {
-  private val fz3 = Q(
+  /** q_fz3 — the string-function differential gate. */
+  def gate: Q = declare(
     "q_fz3_string_fuzz",
-    s"string differential fuzz: ${StringFuzz.NQueries} seeded nested string-op " +
-      "compositions, fingerprint-compared Spark vs DuckDB",
-    (s, d) => StringFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(StringFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz3)
+    s"string differential fuzz: $NQueries seeded nested string-op " +
+      "compositions, fingerprint-compared Spark vs DuckDB")
 }

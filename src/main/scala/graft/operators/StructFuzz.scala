@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.LongType
 
 import scala.util.Random
 
@@ -37,7 +37,7 @@ import scala.util.Random
   *  - `greatest`/`least` over structs: unsupported in DuckDB → never
   *    generated.
   */
-object StructFuzz {
+object StructFuzz extends FuzzExec.Frames {
 
   val NQueries = 35
   val GateSeed = 20260825L
@@ -112,9 +112,9 @@ object StructFuzz {
 
   final case class SQuery(id: Int, table: String, sparkSql: String,
       duckSql: String, df: (SparkSession, String) => DataFrame,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.Generated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[SQuery] =
+  def queries(seed: Long, n: Int): Seq[SQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 449 + i)))
 
   private def gen(id: Int, rnd: Random): SQuery = {
@@ -164,7 +164,7 @@ object StructFuzz {
     val duckSql = s"SELECT ${accessesRaw.map(a => s"${a._2} AS ${a._4}").mkString(", ")}" +
       s" FROM ${t.name}" + where.fold("")(w => s" WHERE ${w._2}")
     val dfFn = (sp: SparkSession, d: String) => {
-      val raw = FuzzExec.table(sp, d, t.name)
+      val raw = Tables.t(sp, d, t.name)
       val f = where.fold(raw)(w => raw.filter(w._3))
       f.select(accessesRaw.map(a => a._3.as(a._4)): _*)
     }
@@ -198,7 +198,7 @@ object StructFuzz {
     val sparkSql = render(s.sparkSql, (v, f) => s"($v).$f", _._1)
     val duckSql = render(s.duckSql, (v, f) => s"($v).$f", _._2)
     val dfFn = (sp: SparkSession, d: String) => {
-      val raw = FuzzExec.table(sp, d, t.name)
+      val raw = Tables.t(sp, d, t.name)
       raw.groupBy(s.df.as("s"))
         .agg(aggs.head._3, aggs.tail.map(_._3): _*)
         .select(keyOuts.map { case (nm, o) => col("s").getField(nm).as(o) } ++
@@ -230,7 +230,7 @@ object StructFuzz {
     val sparkSql = render(s.sparkSql)
     val duckSql = render(s.duckSql)
     val dfFn = (sp: SparkSession, d: String) => {
-      val raw = FuzzExec.table(sp, d, t.name)
+      val raw = Tables.t(sp, d, t.name)
       val f = where.fold(raw)(w => raw.filter(w._2))
       val agged = f.groupBy((col(keyCol) % km).cast(LongType).as("g_0"))
         .agg((if (isMax) max(s.df) else min(s.df)).as("__m"))
@@ -240,57 +240,17 @@ object StructFuzz {
     SQuery(id, t.name, sparkSql, duckSql, dfFn, outCols)
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: SQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = SQuery
 
-  def fingerprint(q: SQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: SQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz15 — the struct differential gate. */
-object StructFuzzQueries extends QueryModule {
-  private val fz15 = Q(
+  /** q_fz15 — the struct differential gate. */
+  def gate: Q = declare(
     "q_fz15_struct_fuzz",
-    s"struct differential fuzz: ${StructFuzz.NQueries} seeded construction/access/" +
+    s"struct differential fuzz: $NQueries seeded construction/access/" +
       "group-by-struct/min-max/comparison queries, dual-rendered, field-projected " +
-      "outputs, fingerprint-compared Spark vs DuckDB",
-    (s, d) => StructFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(StructFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz15)
+      "outputs, fingerprint-compared Spark vs DuckDB")
 }

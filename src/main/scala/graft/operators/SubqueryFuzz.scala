@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.{Q, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.LongType
 
 import scala.util.Random
 
@@ -33,7 +33,7 @@ import scala.util.Random
   * aggregate-then-left-join + coalesce for the scalar forms. The gate
   * (q_fz6) then pins Spark-vs-DuckDB agreement on the same SQL.
   */
-object SubqueryFuzz {
+object SubqueryFuzz extends FuzzExec.Frames {
 
   val NQueries = 60
   val GateSeed = 20260816L
@@ -71,15 +71,14 @@ object SubqueryFuzz {
 
   // ---- query shapes ----
 
-  sealed trait SQuery {
-    def id: Int
-    def outCols: Seq[String]
+  sealed trait SQuery extends FuzzExec.Generated {
     def commonSql: String
+    def duckSql: String = commonSql
     def df(spark: SparkSession, dir: String): DataFrame
   }
 
   private def read(spark: SparkSession, dir: String, t: String): DataFrame =
-    FuzzExec.table(spark, dir, t)
+    Tables.t(spark, dir, t)
 
   /** Correlated [NOT] EXISTS with an inner predicate, optional outer
     * predicate; output = (okey, p_0 string projection). */
@@ -143,7 +142,7 @@ object SubqueryFuzz {
 
   // ---- the seeded population ----
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[SQuery] =
+  def queries(seed: Long, n: Int): Seq[SQuery] =
     (0 until n).map { i => gen(i, new Random(seed + i)) }
 
   private def gen(id: Int, rnd: Random): SQuery = {
@@ -185,57 +184,17 @@ object SubqueryFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: SQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = SQuery
 
-  def fingerprint(q: SQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: SQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz6 — the subquery-predicate differential gate. */
-object SubqueryFuzzQueries extends QueryModule {
-  private val fz6 = Q(
+  /** q_fz6 — the subquery-predicate differential gate. */
+  def gate: Q = declare(
     "q_fz6_subquery_fuzz",
-    s"subquery differential fuzz: ${SubqueryFuzz.NQueries} seeded correlated " +
+    s"subquery differential fuzz: $NQueries seeded correlated " +
       "[NOT] EXISTS / [NOT] IN with three-valued NULL arms / correlated scalar " +
-      "count+max, fingerprint-compared Spark vs DuckDB",
-    (s, d) => SubqueryFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(SubqueryFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz6)
+      "count+max, fingerprint-compared Spark vs DuckDB")
 }

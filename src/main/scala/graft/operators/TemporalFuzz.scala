@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.LongType
 
 import scala.util.Random
 
@@ -25,7 +25,7 @@ import scala.util.Random
   * Truncated timestamps are whole-second, so their string forms agree
   * across engines (the canonical-row cast).
   */
-object TemporalFuzz {
+object TemporalFuzz extends FuzzExec.Frames {
 
   val NQueries = 60
   val GateSeed = 20260814L
@@ -62,7 +62,8 @@ object TemporalFuzz {
   /** `unit` is either a date_trunc unit or `extract:<field>`. */
   final case class TQuery(id: Int, unit: String, byType: Boolean,
       predSql: Option[String], aggs: Seq[TAgg],
-      havingGt: Option[Int] = None) {
+      havingGt: Option[Int] = None) extends FuzzExec.Generated {
+    def duckSql: String = commonSql
 
     def outCols: Seq[String] =
       (Seq("g") ++ (if (byType) Seq("event_type") else Nil)) ++ aggs.map(_.alias)
@@ -91,7 +92,7 @@ object TemporalFuzz {
 
     /** DataFrame rendering over the NORMALIZED events reader. */
     def df(spark: SparkSession, dir: String): DataFrame = {
-      val e = FuzzExec.events(spark, dir)
+      val e = Tables.events(spark, dir)
       val base = predSql.map(p => e.filter(expr(p))).getOrElse(e)
       val keyCol =
         if (isExtract) (unit.stripPrefix("extract:") match {
@@ -110,7 +111,7 @@ object TemporalFuzz {
   }
 
   /** The seeded population: a pure function of `seed`. */
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[TQuery] = {
+  def queries(seed: Long, n: Int): Seq[TQuery] = {
     val rnd = new Random(seed)
     (0 until n).map { i =>
       // 70% date_trunc keys, 30% EXTRACT keys
@@ -155,55 +156,16 @@ object TemporalFuzz {
     }
   }
 
-  private def canonDf(q: TQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  // ---- the gate (run by FuzzExec) ----
 
-  def fingerprint(q: TQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  type Query = TQuery
 
-  /** Independent-jobs reduction (the RelFuzz.fingerprintAll shape). */
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: TQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown() // no thread leak on a failing query
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz2 — the temporal differential gate. */
-object TemporalFuzzQueries extends QueryModule {
-  private val fz2 = Q(
+  /** q_fz2 — the temporal differential gate. */
+  def gate: Q = declare(
     "q_fz2_temporal_fuzz",
-    s"temporal differential fuzz: ${TemporalFuzz.NQueries} seeded date_trunc/EXTRACT rollups " +
-      "(every unit incl. week; ts-literal ranges; HAVING), fingerprint-compared Spark vs DuckDB",
-    (s, d) => TemporalFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(TemporalFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz2)
+    s"temporal differential fuzz: $NQueries seeded date_trunc/EXTRACT rollups " +
+      "(every unit incl. week; ts-literal ranges; HAVING), fingerprint-compared Spark vs DuckDB")
 }

@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -89,7 +86,7 @@ import scala.util.Random
   * ops) so the gate never hits the O(n²) cliff the rewrite exists
   * for; the INT-child tail arm (headroom ⇒ rewrite fires INSIDE this
   * gate) cycles over every table. */
-object TryFuzz {
+object TryFuzz extends FuzzExec.Views {
 
   val NQueries = 36
   val GateSeed = 20261002L
@@ -117,15 +114,15 @@ object TryFuzz {
       Seq("c_mktsegment = 'BUILDING'", "c_custkey % 2 = 0")))
   private def customer = tables(2)
 
-  private def sparkView(t: String) = s"__fz20_$t"
+  protected def sparkView(t: String) = s"__fz20_$t"
 
   /** One generated query: raw Spark SQL (never errors — the hatch is
     * the point), the DuckDB twin (guarded arithmetic in HUGEINT /
     * TRY_CAST), and the output columns both sides canonicalize over. */
   final case class TQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[TQuery] =
+  def queries(seed: Long, n: Int): Seq[TQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 131 + i)))
 
   private def gen(id: Int, rnd: Random): TQuery = {
@@ -513,65 +510,19 @@ object TryFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
+  type Query = TQuery
 
-  def fingerprint(spark: SparkSession, q: TQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz20 — the TRY-mode escape-hatch differential gate. */
-object TryFuzzQueries extends QueryModule {
-  private val fz20 = Q(
+  /** q_fz20 — the TRY-mode escape-hatch differential gate. */
+  def gate: Q = declare(
     "q_fz20_try_fuzz",
-    s"TRY-mode escape-hatch fuzz: ${TryFuzz.NQueries} seeded try_sum/" +
+    s"TRY-mode escape-hatch fuzz: $NQueries seeded try_sum/" +
       "try_add/try_subtract/try_multiply/try_divide/try_mod/try_cast/" +
       "try_element_at queries (sticky window NULLs incl. the round-12 " +
       "try_sum suppression fixture, per-group hatch independence, per-row " +
       "overflow/zero/invalid-input NULLs), dual-rendered against analytic " +
-      "DuckDB twins (HUGEINT guards, TRY_CAST), fingerprint-compared",
-    (s, d) => TryFuzz.fingerprintAll(s, d),
-    Some(TryFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz20)
+      "DuckDB twins (HUGEINT guards, TRY_CAST), fingerprint-compared")
 }

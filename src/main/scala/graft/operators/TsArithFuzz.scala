@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 import java.time.{Duration, Period}
 import scala.util.Random
@@ -39,7 +39,7 @@ import scala.util.Random
   * boundary-diff and field/predicate operands may stay raw because
   * those ops truncate internally.
   */
-object TsArithFuzz {
+object TsArithFuzz extends FuzzExec.Frames {
 
   val NQueries = 40
   val GateSeed = 20260822L
@@ -282,8 +282,9 @@ object TsArithFuzz {
 
   final case class TQuery(id: Int, sparkSql: String, duckSql: String,
       df: (SparkSession, String) => DataFrame, outCols: Seq[String])
+      extends FuzzExec.Generated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[TQuery] =
+  def queries(seed: Long, n: Int): Seq[TQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 389 + i)))
 
   private def gen(id: Int, rnd: Random): TQuery =
@@ -300,7 +301,7 @@ object TsArithFuzz {
     val duckSql = s"SELECT ${outs.map(_.duckSql).mkString(", ")} FROM events" +
       where.fold("")(p => s" WHERE ${p._2}")
     val dfFn = (s: SparkSession, d: String) => {
-      val e = FuzzExec.events(s, d)
+      val e = Tables.events(s, d)
       val f = where.fold(e)(p => e.filter(p._3))
       f.select(outs.map(_.df): _*)
     }
@@ -352,7 +353,7 @@ object TsArithFuzz {
     val sparkSql = render(kSpark, _.sparkSql, where.map(_._1))
     val duckSql = render(kDuck, _.duckSql, where.map(_._2))
     val dfFn = (s: SparkSession, d: String) => {
-      val e = FuzzExec.events(s, d)
+      val e = Tables.events(s, d)
       val f = where.fold(e)(p => e.filter(p._3))
       val agged = f.groupBy(kDf.as("g_0"))
         .agg(aggs.head.df, (aggs.tail.map(_.df) :+ count(lit(1)).as("__hn")): _*)
@@ -362,57 +363,17 @@ object TsArithFuzz {
     TQuery(id, sparkSql, duckSql, dfFn, outCols)
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: TQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = TQuery
 
-  def fingerprint(q: TQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: TQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz12 — the timestamp-arithmetic differential gate. */
-object TsArithFuzzQueries extends QueryModule {
-  private val fz12 = Q(
+  /** q_fz12 — the timestamp-arithmetic differential gate. */
+  def gate: Q = declare(
     "q_fz12_tsarith_fuzz",
-    s"timestamp-arithmetic differential fuzz: ${TsArithFuzz.NQueries} seeded " +
+    s"timestamp-arithmetic differential fuzz: $NQueries seeded " +
       "interval/clamp/trunc/boundary-diff queries over events.ts, dual-rendered " +
-      "from one AST, fingerprint-compared Spark vs DuckDB",
-    (s, d) => TsArithFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(TsArithFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz12)
+      "from one AST, fingerprint-compared Spark vs DuckDB")
 }

@@ -1,9 +1,7 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import scala.util.Random
 
@@ -41,7 +39,7 @@ import scala.util.Random
   * JSON text is constructed per row from table residues with
   * whitespace-free concatenation, so both engines parse byte-identical
   * documents. */
-object VariantFuzz {
+object VariantFuzz extends FuzzExec.Views {
 
   val NQueries = 28
   val GateSeed = 20261117L
@@ -57,12 +55,12 @@ object VariantFuzz {
     VTable("customer", "c_custkey", Seq("c_nationkey", "c_custkey"),
       Seq("c_mktsegment = 'BUILDING'", "c_custkey % 2 = 0")))
 
-  private def sparkView(t: String) = s"__fz26_$t"
+  protected def sparkView(t: String) = s"__fz26_$t"
 
   final case class VQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[VQuery] =
+  def queries(seed: Long, n: Int): Seq[VQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 709 + i)))
 
   /** The per-row JSON document, dialect-split only on the string cast:
@@ -148,66 +146,24 @@ object VariantFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      // spread: per-row parse_json/variant_get dominates and the input
-      // is a single-row-group file — see FuzzExec.spread
-      FuzzExec.spread(spark, FuzzExec.table(spark, dir, t.name))
-        .createOrReplaceTempView(sparkView(t.name))
+  type Query = VQuery
 
-  def fingerprint(spark: SparkSession, q: VQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
+  // spread: per-row parse_json/variant_get dominates and the input is a
+  // single-row-group file — see FuzzExec.spread
+  override protected def view(spark: SparkSession, dir: String,
+      table: String): DataFrame =
+    FuzzExec.spread(spark, Tables.t(spark, dir, table))
 
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz26 — the VARIANT differential gate. */
-object VariantFuzzQueries extends QueryModule {
-  private val fz26 = Q(
+  /** q_fz26 — the VARIANT differential gate. */
+  def gate: Q = declare(
     "q_fz26_variant_fuzz",
-    s"VARIANT fuzz: ${VariantFuzz.NQueries} seeded parse_json/variant_get/" +
+    s"VARIANT fuzz: $NQueries seeded parse_json/variant_get/" +
       "try_variant_get/try_parse_json queries over per-row constructed " +
       "documents — typed scalar/nested/array gets, OOB and missing-key " +
       "NULLs, type-mismatch hatches, decimal/double/boolean coercions — " +
-      "vs DuckDB json_extract_string + (TRY_)CAST twins",
-    (s, d) => VariantFuzz.fingerprintAll(s, d),
-    Some(VariantFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz26)
+      "vs DuckDB json_extract_string + (TRY_)CAST twins")
 }

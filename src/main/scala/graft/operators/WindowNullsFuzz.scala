@@ -1,9 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.Q
 
 import scala.util.Random
 
@@ -47,7 +44,7 @@ import scala.util.Random
   * .TailFrameRewrite]] correctly refuses them and the quadratic
   * frame would be the gate's own cost — running and sliding frames
   * only (the q_fz4 policy). */
-object WindowNullsFuzz {
+object WindowNullsFuzz extends FuzzExec.Views {
 
   val NQueries = 32
   val GateSeed = 20261011L
@@ -69,12 +66,12 @@ object WindowNullsFuzz {
       Seq("c_nationkey", "c_custkey"), "c_mktsegment",
       Seq("c_mktsegment = 'BUILDING'", "c_custkey % 2 = 0")))
 
-  private def sparkView(t: String) = s"__fz21_$t"
+  protected def sparkView(t: String) = s"__fz21_$t"
 
   final case class WQuery(id: Int, sparkSql: String, duckSql: String,
-      outCols: Seq[String])
+      outCols: Seq[String]) extends FuzzExec.SqlGenerated
 
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[WQuery] =
+  def queries(seed: Long, n: Int): Seq[WQuery] =
     (0 until n).map(i => gen(i, new Random(seed * 211 + i)))
 
   /** A nullable value expression shared by both dialects: NULL on a
@@ -164,64 +161,18 @@ object WindowNullsFuzz {
     }
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    for (t <- tables)
-      FuzzExec.table(spark, dir, t.name)
-        .createOrReplaceTempView(sparkView(t.name))
+  type Query = WQuery
 
-  def fingerprint(spark: SparkSession, q: WQuery): (Long, Long) = {
-    import org.apache.spark.sql.types.StringType
-    val canon = concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
-    val r = spark.sql(q.sparkSql).select(canon.as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L)).as("h"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected def viewTables: Seq[String] = tables.map(_.name)
 
-  def fingerprintAll(spark: SparkSession, dir: String): DataFrame = {
-    registerViews(spark, dir)
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val (n, h) = fingerprint(spark, q)
-        (q.id.toLong, n, h)
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.duckSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz21 — the IGNORE NULLS window differential gate. */
-object WindowNullsFuzzQueries extends QueryModule {
-  private val fz21 = Q(
+  /** q_fz21 — the IGNORE NULLS window differential gate. */
+  def gate: Q = declare(
     "q_fz21_window_nulls_fuzz",
-    s"IGNORE NULLS window fuzz: ${WindowNullsFuzz.NQueries} seeded " +
+    s"IGNORE NULLS window fuzz: $NQueries seeded " +
       "lead/lag/nth_value/first_value/last_value IGNORE NULLS queries over " +
       "running and sliding frames with data-dependent NULL patterns, " +
       "dual-rendered (DuckDB native in-paren form for first/last, filtered " +
-      "window lists for the multi-arg functions), fingerprint-compared",
-    (s, d) => WindowNullsFuzz.fingerprintAll(s, d),
-    Some(WindowNullsFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz21)
+      "window lists for the multi-arg functions), fingerprint-compared")
 }

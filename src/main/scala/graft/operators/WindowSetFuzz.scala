@@ -1,10 +1,10 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.LongType
 
 import scala.util.Random
 
@@ -39,7 +39,7 @@ import scala.util.Random
   * checksums gate it (q_fz4), and the in-JVM property suite proves
   * DF ≡ SQL under Spark so the gate isolates cross-engine drift.
   */
-object WindowSetFuzz {
+object WindowSetFuzz extends FuzzExec.Frames {
 
   val NQueries = 72
   val GateSeed = 20260814L
@@ -139,10 +139,9 @@ object WindowSetFuzz {
 
   // ---- query shapes ----
 
-  sealed trait WQuery {
-    def id: Int
-    def outCols: Seq[String]
+  sealed trait WQuery extends FuzzExec.Generated {
     def commonSql: String
+    def duckSql: String = commonSql
     def df(spark: SparkSession, dir: String): DataFrame
   }
 
@@ -159,7 +158,7 @@ object WindowSetFuzz {
       topK.fold(inner)(k => s"SELECT * FROM ($inner) __w WHERE w_0 <= $k")
     }
     def df(spark: SparkSession, dir: String): DataFrame = {
-      val base = FuzzExec.table(spark, dir, table)
+      val base = Tables.t(spark, dir, table)
       val w = Window.partitionBy(partDf).orderBy(orders.map(_.df): _*)
       val proj = base.select(
         (Seq(col(key), partDf.as("p_0")) ++
@@ -219,7 +218,7 @@ object WindowSetFuzz {
         s"CAST(count(*) AS BIGINT) AS c_n FROM $table GROUP BY $groupSql"
     }
     def df(spark: SparkSession, dir: String): DataFrame = {
-      val base = FuzzExec.table(spark, dir, table)
+      val base = Tables.t(spark, dir, table)
       val aggs = Seq(count_distinct(distDf).cast(LongType).as("c_0")) ++
         (if (withSum) Seq(sum_distinct(distDf).cast(LongType).as("c_1")) else Nil) ++
         Seq(count(lit(1)).cast(LongType).as("c_n"))
@@ -284,7 +283,7 @@ object WindowSetFuzz {
 
   /** The seeded population: a pure function of `seed` (the family-5
     * cycle counter is local to the call, so repeat calls are equal). */
-  def queries(seed: Long = GateSeed, n: Int = NQueries): Seq[WQuery] = {
+  def queries(seed: Long, n: Int): Seq[WQuery] = {
     val rnd = new Random(seed)
     var f5 = -1
     (0 until n).map { i =>
@@ -448,7 +447,7 @@ object WindowSetFuzz {
     // the DF side must project the SAME names for the typed set ops
     val rSql = s"SELECT ${selSql.mkString(", ")} FROM ${t.name} WHERE $rp"
     def side(p: Column)(spark: SparkSession, dir: String): DataFrame =
-      FuzzExec.table(spark, dir, t.name).filter(p)
+      Tables.t(spark, dir, t.name).filter(p)
         .select(selDf.toIndexedSeq: _*)
     SetQ(id, op, lSql, rSql, side(lpd), side(rpd),
       outCols = selSql.indices.map(i => s"s_$i"))
@@ -467,56 +466,16 @@ object WindowSetFuzz {
     DistQ(id, t.name, gSql, gDf, dSql, dDf, withSum = rnd.nextBoolean())
   }
 
-  // ---- fingerprint reduction (the RelFuzz discipline) ----
+  // ---- the gate (run by FuzzExec) ----
 
-  private def canonDf(q: WQuery): Column =
-    concat_ws("|", q.outCols.map(c =>
-      coalesce(col(c).cast(StringType), lit(RelFuzz.NullSentinel))): _*)
+  type Query = WQuery
 
-  def fingerprint(q: WQuery, frame: DataFrame): DataFrame =
-    frame.select(canonDf(q).as("__c"))
-      .agg(count(lit(1)).cast(LongType).as("n_rows"),
-        coalesce(sum(Sketches.md5Long56(col("__c")) % RelFuzz.ModP), lit(0L))
-          .as("checksum"))
-      .select(lit(q.id.toLong).as("qid"), col("n_rows"), col("checksum"))
+  protected def render(spark: SparkSession, dir: String, q: Query): DataFrame =
+    q.df(spark, dir)
 
-  def fingerprintAll(spark: SparkSession, dir: String,
-      frames: WQuery => DataFrame): DataFrame = {
-    import scala.collection.parallel.CollectionConverters._
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(FuzzExec.poolSize(spark)))
-    val par = queries().par
-    par.tasksupport = pool
-    val rows =
-      try par.map { q =>
-        val r = fingerprint(q, frames(q)).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }.toList.sortBy(_._1)
-      finally pool.environment.shutdown()
-    import spark.implicits._
-    rows.toDF("qid", "n_rows", "checksum")
-  }
-
-  def duckOracleSql: String = {
-    val branches = queries().map { q =>
-      val canon = "concat_ws('|', " + q.outCols.map(c =>
-        s"coalesce(CAST($c AS VARCHAR), '${RelFuzz.NullSentinel}')").mkString(", ") + ")"
-      s"""SELECT ${q.id} AS qid, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(coalesce(sum(${Sketches.md5Long56Sql("__c")} % ${RelFuzz.ModP}), 0) AS BIGINT) AS checksum
-         |FROM (SELECT $canon AS __c FROM (${q.commonSql}) __q) __cq""".stripMargin
-    }
-    s"SELECT qid, n_rows, checksum FROM (\n${branches.mkString("\nUNION ALL\n")}\n) ORDER BY qid"
-  }
-}
-
-/** q_fz4 — the window + set-op differential gate. */
-object WindowSetFuzzQueries extends QueryModule {
-  private val fz4 = Q(
+  /** q_fz4 — the window + set-op differential gate. */
+  def gate: Q = declare(
     "q_fz4_window_setop_fuzz",
-    s"window+set-op differential fuzz: ${WindowSetFuzz.NQueries} seeded window " +
-      "frames / ranking / set ops / distinct aggs, fingerprint-compared Spark vs DuckDB",
-    (s, d) => WindowSetFuzz.fingerprintAll(s, d, q => q.df(s, d)),
-    Some(WindowSetFuzz.duckOracleSql))
-
-  override val all: Seq[Q] = Seq(fz4)
+    s"window+set-op differential fuzz: $NQueries seeded window " +
+      "frames / ranking / set ops / distinct aggs, fingerprint-compared Spark vs DuckDB")
 }

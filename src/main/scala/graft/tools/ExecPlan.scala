@@ -16,8 +16,7 @@ object ExecPlan {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_dd8_semantic_dedup")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.write.format("noop").mode("overwrite").save()
     Thread.sleep(1000) // status-store updates ride the listener bus

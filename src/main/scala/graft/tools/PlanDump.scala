@@ -24,8 +24,7 @@ object PlanDump {
         "q_llm2_training_export", "q_j1_join_multiway",
         "q_m5_scd2", "q_cc2_components_star")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     for (n <- names) {
       try {

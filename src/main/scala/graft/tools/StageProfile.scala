@@ -13,8 +13,7 @@ object StageProfile {
     val names = args.headOption.map(_.split(",").toSeq)
       .getOrElse(Seq("q_llm1_corpus_curation"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
+    val spark = GraftSession.local()
 
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Int, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {

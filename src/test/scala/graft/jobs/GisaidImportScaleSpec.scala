@@ -19,8 +19,13 @@ class GisaidImportScaleSpec extends SparkSpec {
   private val FeedN = 2000
   private def invalid(i: Int) = i % 33 == 0
 
-  private def rec(i: Int): String = {
-    val seq = if (invalid(i)) "" else if (i % 3 == 0) mutated else base
+  // a sequence not aligned to the reference: one base short or long
+  private def misalignedSeq(i: Int) =
+    if (i % 2 == 0) base.substring(1) else base + "A"
+
+  private def rec(i: Int, misaligned: Int => Boolean = _ => false): String = {
+    val seq = if (invalid(i)) "" else if (misaligned(i)) misalignedSeq(i)
+      else if (i % 3 == 0) mutated else base
     val date = if (i % 5 == 0) "2021-03" else if (i % 5 == 1) "2021" else "2021-03-15"
     val strain = if (i % 4 == 0) s"Switzerland/ZH-ETHZ-16$i/2021" else s"Germany/BY-$i/2021"
     val lineage = if (i % 2 == 0) "B.1.1.7" else "BA.1"
@@ -32,7 +37,7 @@ class GisaidImportScaleSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("gisaid-scale-")
     val feedFile = dir.resolve("provision.json")
     java.nio.file.Files.writeString(feedFile,
-      (1 to FeedN).map(rec).mkString("\n"))
+      (1 to FeedN).map(rec(_)).mkString("\n"))
 
     val existing = (1500 to 2500).map { i =>
       (s"EPI_ISL_$i", s"Germany/BY-$i/2021", java.sql.Date.valueOf("2021-03-15"),
@@ -98,5 +103,73 @@ class GisaidImportScaleSpec extends SparkSpec {
     assert(idTable.filter(col("ethid") === 9999)
       .select("gisaid_id").as[String].head() == "EPI_ISL_STAGED",
       "already-recorded ids are never overwritten")
+  }
+
+  private def writeFeed(dir: java.nio.file.Path, misaligned: Int => Boolean): String = {
+    val feedFile = dir.resolve("provision.json")
+    java.nio.file.Files.writeString(feedFile,
+      (1 to FeedN).map(rec(_, misaligned)).mkString("\n"))
+    feedFile.toString
+  }
+
+  private def demoTables(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    val existing = (1500 to 2500).map { i =>
+      (s"EPI_ISL_$i", s"Germany/BY-$i/2021", java.sql.Date.valueOf("2021-03-15"),
+        if (i % 2 == 0) "B.1.1.7" else "BA.1", base)
+    }.toDF("gisaid_epi_isl", "strain", "date", "pango_lineage", "seq_aligned")
+    val identifiers = Seq((164, null.asInstanceOf[String], "pending"))
+      .toDF("ethid", "gisaid_id", "note")
+    (existing, identifiers)
+  }
+
+  test("misaligned sequences count as failed; under 5% the import commits without them") {
+    import spark.implicits._
+    // 19 misaligned (i%100==50, minus 1650 which is already empty) +
+    // 60 empty = 79 of 2000 failed: 3.95% < 5%
+    def misaligned(i: Int) = i % 100 == 50 && !invalid(i)
+    val dir = java.nio.file.Files.createTempDirectory("gisaid-misaligned-")
+    val feed = writeFeed(dir, misaligned)
+    val (existing, identifiers) = demoTables()
+    val outDir = dir.resolve("out").toString
+    val report = GisaidImport.run(spark, feed, existing, identifiers, outDir)
+
+    val misalignedIds = (1 to FeedN).filter(misaligned).map(i => s"EPI_ISL_$i")
+    assert(misalignedIds.size == 19)
+    assert(report.failed == (1 to FeedN).count(invalid) + misalignedIds.size)
+    assert(report.success)
+
+    val mutIds = spark.read.parquet(s"$outDir/gisaid_api_sequence_mutation")
+      .select("gisaid_epi_isl").distinct().as[String].collect().toSet
+    assert(mutIds.nonEmpty)
+    assert(mutIds.intersect(misalignedIds.toSet).isEmpty,
+      "no mutation rows for misaligned records")
+    // a misaligned entry never replaces the served record: new ids are
+    // absent, ids already served keep their old record (the feed's
+    // entries for them carry date 2021-03, the existing rows 2021-03-15)
+    val served = spark.read.parquet(s"$outDir/gisaid_api_sequence")
+      .filter(col("gisaid_epi_isl").isin(misalignedIds: _*))
+      .select(col("gisaid_epi_isl"), col("date").cast("string"))
+      .as[(String, String)].collect()
+    assert(served.map(_._1).toSet ==
+      misalignedIds.filter(_.stripPrefix("EPI_ISL_").toInt >= 1500).toSet)
+    assert(served.forall(_._2 == "2021-03-15"), served.mkString(", "))
+  }
+
+  test("misaligned sequences over 5% abort the import before commit") {
+    // 200 misaligned (i%10==0, minus the empty ones) + 60 empty: 13%
+    def misaligned(i: Int) = i % 10 == 0 && !invalid(i)
+    val dir = java.nio.file.Files.createTempDirectory("gisaid-misaligned-abort-")
+    val feed = writeFeed(dir, misaligned)
+    val (existing, identifiers) = demoTables()
+    val outDir = dir.resolve("out").toString
+    val e = intercept[IllegalArgumentException] {
+      GisaidImport.run(spark, feed, existing, identifiers, outDir)
+    }
+    assert(e.getMessage.contains("import failed:"), e.getMessage)
+    for (t <- Seq("gisaid_api_sequence", "gisaid_api_sequence_mutation",
+        "sequence_identifier"))
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(outDir, t)),
+        s"$t must not be committed")
   }
 }
