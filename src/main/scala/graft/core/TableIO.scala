@@ -64,13 +64,20 @@ object TableIO {
     * phases:
     *
     *  1. **Stage**: every table's parquet write runs first, to
-    *     `<path>.staging`. All live dirs are untouched during this
-    *     phase, so the plans may freely read the CURRENT live tables
-    *     (the mutation merge reads the live mutation table) — and the
+    *     `<path>.staging`, as concurrent Spark jobs from a
+    *     [[DriverPool]] of `min(#tables, defaultParallelism)` threads,
+    *     so the task slots stay busy while another table's job is
+    *     planned, scheduled or committed on the driver. All live dirs
+    *     are untouched during this phase — no rename happens until
+    *     every stage has finished — so the plans may freely read the
+    *     CURRENT live tables (the mutation merge reads the live
+    *     mutation table), whatever order the stages run in, and the
     *     heavy, failure-prone distributed work all happens while the
-    *     serving set is still the old consistent version. No
-    *     `localCheckpoint`: nothing is pinned on executors, an executor
-    *     loss during staging just recomputes lineage.
+    *     serving set is still the old consistent version. A failed
+    *     stage fails the commit with its own exception before any
+    *     intent is written. No `localCheckpoint`: nothing is pinned on
+    *     executors, an executor loss during staging just recomputes
+    *     lineage.
     *  2. **Swap**: record a swap-intent file (atomic temp+rename
     *     write), then swap every staged dir over its live dir in a
     *     tight rename-only loop, then drop the intent.
@@ -83,7 +90,9 @@ object TableIO {
     * see a mixed-version serving set longer than the crash window. */
   def writeAtomicSwapAll(tables: Seq[(DataFrame, String)], intentFile: String): Unit = {
     recoverSwapAll(intentFile)
-    tables.foreach { case (df, path) =>
+    val width = tables.headOption.fold(1)(t =>
+      math.min(tables.size, t._1.sparkSession.sparkContext.defaultParallelism))
+    DriverPool.map(tables, width) { case (df, path) =>
       deleteRecursively(Paths.get(path + ".staging"))
       df.write.mode("overwrite").parquet(path + ".staging")
     }

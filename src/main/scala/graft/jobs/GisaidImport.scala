@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftSession
-import graft.core.TableIO
+import graft.core.{DriverPool, TableIO}
 import graft.genomics.{Annotations, GeoRules, MutationCaller}
 import graft.operators.Upsert
 import graft.sources.Sources
@@ -110,10 +110,10 @@ object GisaidImport {
   private[jobs] val SwapIntent = "_swap_intent"
 
   /** Steps 1–6 as pure plan composition + the report counts (three
-    * scalar aggregations — no O(table) driver materialization). The
-    * returned frames are LAZY and may read the live output tables;
-    * [[run]]'s staged commit executes them while those dirs are still
-    * untouched. */
+    * scalar aggregations in two concurrent jobs — no O(table) driver
+    * materialization). The returned frames are LAZY and may read the
+    * live output tables; [[run]]'s staged commit executes them while
+    * those dirs are still untouched. */
   private[graft] def plan(spark: SparkSession, feedPath: String, existing: DataFrame,
       identifiers: DataFrame, outDir: String): (Seq[(String, DataFrame)], ImportReport) = {
     // 1. extract + drift check; an .xz feed (what GISAID actually
@@ -140,43 +140,49 @@ object GisaidImport {
         col("strain").isNull || length(trim(col("strain"))) === 0 ||
         col("seq_aligned").isNull ||
         length(col("seq_aligned")) =!= demoReference.length)
-    val countsRow = normalized
-      .agg(count(lit(1)).as("processed"),
-        count(when(col("_invalid"), 1)).as("failed")).head()
-    val (processedCnt, failedCnt) = (countsRow.getLong(0), countsRow.getLong(1))
     val parsed = normalized.filter(!col("_invalid")).drop("_invalid")
+
+    // Deletion (step 5) is keyed on ids ABSENT FROM THE FEED, not absent
+    // from the valid slice: an entry present in the package with a
+    // usable id but invalid fields (e.g. empty sequence) counts as
+    // failed, but must NOT delete the previously imported record
+    // (GisaidApiImporter.java:374-381 deletes only ids missing from the
+    // data package; failed entries are never deleted).
+    val feedIds = normalized
+      .filter(col("gisaid_epi_isl").isNotNull && length(trim(col("gisaid_epi_isl"))) > 0)
+      .select("gisaid_epi_isl")
+
+    // the report's counts: two independent aggregations, run as
+    // concurrent Spark jobs; the deletion count joins the report
+    // (reference FinalReport carries deleted-entry counts too)
+    val Seq(counts, deleted) = DriverPool.map(Seq(
+        normalized.agg(count(lit(1)).as("processed"),
+          count(when(col("_invalid"), 1)).as("failed")),
+        existing.select("gisaid_epi_isl").join(feedIds, Seq("gisaid_epi_isl"), "left_anti")
+          .agg(count(lit(1)).as("deleted"))),
+      width = 2)(_.head())
+    val (processedCnt, failedCnt, deletedCnt) =
+      (counts.getLong(0), counts.getLong(1), deleted.getLong(0))
 
     // 3. change detection (M3) — sequences compared by content hash so
     // the 30kb strings stay out of the comparison shuffle
-    // cached: consumed twice (the kind-count log line and toProcess) —
-    // uncached, the change-detection join would recompute per consumer
+    // cached: consumed three times (mutation calling, the upsert and the
+    // mutation merge) — uncached, the change-detection join would
+    // recompute per consumer
     val kinds = Upsert.changeKinds(
       existing.withColumn("seq_hash", md5(col("seq_aligned"))).drop("seq_aligned"),
       parsed.withColumn("seq_hash", md5(col("seq_aligned"))),
       Seq("gisaid_epi_isl"), Seq("strain", "date", "pango_lineage", "seq_hash")).cache()
     val toProcess = kinds.filter(col("change_kind") =!= "unchanged").drop("seq_hash")
-    println(s"[gisaid] change kinds: " + kinds.groupBy("change_kind").count()
-      .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" "))
 
     // 4. mutation calling (D1) on the processed set
     val mutations = MutationCaller.callTable(spark, toProcess, "gisaid_epi_isl",
       "seq_aligned", demoReference, maskedSites = Set(5))
 
-    // 5. merged table: upsert processed records, then drop deleted ids
-    // (M4); the deletion count joins the report (reference FinalReport
-    // carries deleted-entry counts too). Deletion is keyed on ids ABSENT
-    // FROM THE FEED, not absent from the valid slice: an entry present in
-    // the package with a usable id but invalid fields (e.g. empty
-    // sequence) counts as failed, but must NOT delete the previously
-    // imported record (GisaidApiImporter.java:374-381 deletes only ids
-    // missing from the data package; failed entries are never deleted).
-    val feedIds = normalized
-      .filter(col("gisaid_epi_isl").isNotNull && length(trim(col("gisaid_epi_isl"))) > 0)
-      .select("gisaid_epi_isl")
+    // 5. merged table: upsert processed records, then drop the ids
+    // missing from the feed (M4)
     val merged = Upsert.upsert(existing, toProcess.drop("change_kind"), Seq("gisaid_epi_isl"))
     val finalTable = Upsert.deleteMissing(merged, feedIds, Seq("gisaid_epi_isl"))
-    val deletedCnt = existing.select("gisaid_epi_isl")
-      .join(feedIds, Seq("gisaid_epi_isl"), "left_anti").count()
 
     // 6. identifier update (M8): set gisaid_id where ours and not yet
     // set — null-guarded, an already-recorded id is never overwritten

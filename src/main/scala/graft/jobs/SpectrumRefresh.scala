@@ -4,11 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.analytics.{Reports, SpectrumViews}
-import graft.core.TableIO
+import graft.core.{DriverPool, TableIO}
 
 /** Runnable refresh job for the Spectrum matview DAG (§3.3): read the
-  * domain tables, build all six views, write each with an atomic swap
-  * — the replacement for `refresh_all_mv()`
+  * domain tables, build the matviews plus the QC/report outputs (11,
+  * or 13 when the usage feed and the private twin's inputs exist) and
+  * write them in ONE multi-table commit
+  * ([[TableIO.writeAtomicSwapAll]], which stages them as concurrent
+  * Spark jobs) — the replacement for `refresh_all_mv()`
   * (`spectrum/refreshes.sql:14-36`).
   *
   * Usage: SpectrumRefresh <inDir> <outDir>   (parquet domain tables)
@@ -97,8 +100,12 @@ object SpectrumRefresh {
         "bag_test_numbers")
       val optional = Seq("swiss_canton", "bag_meldeformular",
         "consensus_sequence_nextclade_data", "spectrum_usage_os")
-        .filter(n => graft.core.TableIO.exists(spark, s"$inDir/$n"))
-      (required ++ optional).map(n => n -> spark.read.parquet(s"$inDir/$n")).toMap
+        .filter(n => TableIO.exists(spark, s"$inDir/$n"))
+      // each resolution runs its own schema-inference job: resolve
+      // them concurrently
+      val names = required ++ optional
+      val width = math.min(names.size, spark.sparkContext.defaultParallelism)
+      DriverPool.map(names, width)(n => n -> spark.read.parquet(s"$inDir/$n")).toMap
     }
 
   /** FIXTURES.md-shaped deterministic demo tables (seed-free: derived

@@ -1,13 +1,10 @@
 package graft.operators
 
 import graft.{Q, QueryModule, Tables}
+import graft.core.DriverPool
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, concat_ws, count, lit, sum}
 import org.apache.spark.sql.types.{LongType, StringType}
-
-import java.util.concurrent.ForkJoinPool
-import scala.collection.parallel.CollectionConverters._
-import scala.collection.parallel.ForkJoinTaskSupport
 
 /** The one differential-fuzz executor. A harness (`RelFuzz`,
   * `BitwiseFuzz`, … — 32 of them) supplies only its seeded generator,
@@ -99,16 +96,12 @@ trait FuzzExec {
         coalesce(sum(Sketches.md5Long56(col("__c")) % ModP), lit(0L))
           .as("checksum"))
 
-  /** `f` over the whole population, one Spark job per query from the
-    * thread pool, results in qid order; the pool is shut down even
-    * when a query fails (no thread leak). */
-  protected final def pooled[R](spark: SparkSession)(f: Query => R): List[R] = {
-    val pool = new ForkJoinPool(poolSize(spark))
-    val par = queries().sortBy(_.id).par
-    par.tasksupport = new ForkJoinTaskSupport(pool)
-    try par.map(f).toList
-    finally pool.shutdown()
-  }
+  /** `f` over the whole population, one Spark job per query from a
+    * [[DriverPool]] of [[FuzzExec.poolSize]] threads, results in qid
+    * order; the pool is shut down even when a query fails (no thread
+    * leak). */
+  protected final def pooled[R](spark: SparkSession)(f: Query => R): List[R] =
+    DriverPool.map(queries().sortBy(_.id), poolSize(spark))(f)
 
   /** DuckDB twin of the Spark-side run: one UNION ALL branch per
     * query, over the same canonical string. */

@@ -61,6 +61,33 @@ class TableIOSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(intent)))
   }
 
+  test("concurrent commit: a failing stage surfaces its own error and swaps nothing") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("swapfail").toString
+    val paths = Seq("a", "b", "c").map(n => s"$dir/$n")
+    val intent = s"$dir/_swap_intent"
+    TableIO.writeAtomicSwapAll(paths.map(p => (Seq((1, s"$p-v1")).toDF("k", "v"), p)), intent)
+    val planted = "planted stage failure"
+    val boom = udf((k: Long) => { if (k >= 0) throw new IllegalStateException(planted); k })
+    val e = intercept[Exception] {
+      TableIO.writeAtomicSwapAll(Seq(
+        (Seq((1, "a-v2")).toDF("k", "v"), paths(0)),
+        (spark.range(1).select(boom(col("id")).as("k"), lit("b-v2").as("v")), paths(1)),
+        (Seq((1, "c-v2")).toDF("k", "v"), paths(2))), intent)
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(planted)), e)
+    assert(!Files.exists(java.nio.file.Paths.get(intent)), "no swap intent after a failed stage")
+    for (p <- paths) assert(TableIO.read(spark, p).collect()(0).getString(1) == s"$p-v1")
+    // the pool's threads exit once it terminates; a leaked pool never would
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith("graft-driver-pool-"))
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while (poolThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(poolThreads.isEmpty, poolThreads.map(_.getName).mkString(", "))
+  }
+
   test("crash between swaps: recoverSwapAll rolls the commit forward to a consistent set") {
     import spark.implicits._
     val dir = Files.createTempDirectory("swapcrash").toString
