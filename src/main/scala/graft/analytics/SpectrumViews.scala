@@ -241,19 +241,29 @@ object SpectrumViews {
         avg(col("visitors")).as("avg_visitors"),
         expr("percentile(visitors, 0.5)").as("median_visitors"))
 
+  /** The four views that read `spectrum_sequence_public_meta`, keyed
+    * by their reference matview names. The reference's matviews read
+    * the meta matview rather than recomputing it
+    * (`spectrum/refreshes.sql:14-36`); the refresh job passes the
+    * meta rows it has just staged, so no view re-runs meta's plan. */
+  def metaViews(meta: DataFrame, nucMutations: DataFrame, aaMutations: DataFrame,
+      cases: DataFrame, countries: DataFrame, startDate: String,
+      endDate: String): Map[String, DataFrame] =
+    Map(
+      "spectrum_sequence_mutation_aa" -> sequenceMutations(meta, aaMutations, aa = true),
+      "spectrum_sequence_mutation_nucleotide" -> sequenceMutations(meta, nucMutations, aa = false),
+      "spectrum_sequence_intensity" -> sequenceIntensity(meta, cases, countries, startDate, endDate),
+      "spectrum_pangolin_lineage_mutation" -> lineageMutationCounts(meta, nucMutations, countries))
+
   /** The whole DAG, returning every view keyed by its reference
-    * matview name (the refresh job writes each with TableIO). */
+    * matview name, with meta's readers built over meta's own plan. */
   def buildAll(consensus: DataFrame, sequenceIdentifier: DataFrame,
       viollierTest: DataFrame, gisaid: DataFrame, nucMutations: DataFrame,
       aaMutations: DataFrame, cases: DataFrame, countries: DataFrame,
       bagDashboard: DataFrame, startDate: String, endDate: String): Map[String, DataFrame] = {
     val meta = sequencePublicMeta(consensus, sequenceIdentifier, viollierTest, gisaid)
-    Map(
+    metaViews(meta, nucMutations, aaMutations, cases, countries, startDate, endDate) ++ Map(
       "spectrum_sequence_public_meta" -> meta,
-      "spectrum_sequence_mutation_aa" -> sequenceMutations(meta, aaMutations, aa = true),
-      "spectrum_sequence_mutation_nucleotide" -> sequenceMutations(meta, nucMutations, aa = false),
-      "spectrum_sequence_intensity" -> sequenceIntensity(meta, cases, countries, startDate, endDate),
-      "spectrum_pangolin_lineage_mutation" -> lineageMutationCounts(meta, nucMutations, countries),
       "spectrum_swiss_cases" -> swissCases(bagDashboard))
   }
 }

@@ -63,46 +63,107 @@ object TableIO {
     * JDBC transaction (`BatchProcessingWorker.java:443-665`). Two
     * phases:
     *
-    *  1. **Stage**: every table's parquet write runs first, to
-    *     `<path>.staging`, as concurrent Spark jobs from a
-    *     [[DriverPool]] of `min(#tables, defaultParallelism)` threads,
-    *     so the task slots stay busy while another table's job is
-    *     planned, scheduled or committed on the driver. All live dirs
-    *     are untouched during this phase — no rename happens until
-    *     every stage has finished — so the plans may freely read the
-    *     CURRENT live tables (the mutation merge reads the live
-    *     mutation table), whatever order the stages run in, and the
-    *     heavy, failure-prone distributed work all happens while the
-    *     serving set is still the old consistent version. A failed
-    *     stage fails the commit with its own exception before any
-    *     intent is written. No `localCheckpoint`: nothing is pinned on
-    *     executors, an executor loss during staging just recomputes
-    *     lineage.
-    *  2. **Swap**: record a swap-intent file (atomic temp+rename
-    *     write), then swap every staged dir over its live dir in a
-    *     tight rename-only loop, then drop the intent.
+    *  1. **Stage**, in up to two dependency waves. Wave 1 is `tables`:
+    *     each parquet write runs to `<path>.staging`, as concurrent
+    *     Spark jobs from a [[DriverPool]] of
+    *     `min(#tables, defaultParallelism)` threads, so the task slots
+    *     stay busy while another table's job is planned, scheduled or
+    *     committed on the driver. Only then is `wave2` called, with a
+    *     reader over wave 1's staged dirs (`staged(path)` for a wave-1
+    *     `path`); its outputs stage the same way. A wave-2 output that
+    *     derives from a wave-1 output reads the rows just staged
+    *     instead of re-running that output's plan inside its own (the
+    *     refresh's meta readers, the import's mutation merge). A
+    *     staged read passes the wave-1 frame's schema, so it runs no
+    *     schema-inference job, and building the wave-2 plans runs no
+    *     Spark job at all. All live dirs are untouched during both
+    *     waves — no rename happens until every stage has finished —
+    *     so every other read sees the CURRENT live tables (the
+    *     mutation merge reads the live mutation table), whatever
+    *     order the stages run in, and the heavy, failure-prone
+    *     distributed work all happens while the serving set is still
+    *     the old consistent version. A failed stage fails the commit
+    *     with its own exception before any intent is written; a
+    *     failed wave-1 stage also means no wave-2 plan is ever built.
+    *     No `localCheckpoint`: nothing is pinned on executors, an
+    *     executor loss during staging just recomputes lineage.
+    *  2. **Swap**: record a swap-intent file listing both waves
+    *     (atomic temp+rename write), then swap every staged dir over
+    *     its live dir in a tight rename-only loop, then drop the
+    *     intent.
+    *
+    * A wave-2 frame must not be run after this returns: its staged
+    * source has been renamed to the live dir, so the files its plan
+    * lists are gone. Read the committed table instead.
     *
     * A crash during staging leaves the live set untouched (stale
     * `.staging` dirs are overwritten next run). A crash between swaps
     * leaves the intent on disk; [[recoverSwapAll]] — called here
     * defensively and by job mains at startup — rolls the commit
-    * FORWARD (each staged dir is a complete table), so readers never
-    * see a mixed-version serving set longer than the crash window. */
-  def writeAtomicSwapAll(tables: Seq[(DataFrame, String)], intentFile: String): Unit = {
+    * FORWARD (each staged dir is a complete table, wave 2's too), so
+    * readers never see a mixed-version serving set longer than the
+    * crash window. */
+  def writeAtomicSwapAll(tables: Seq[(DataFrame, String)], intentFile: String,
+      wave2: (String => DataFrame) => Seq[(DataFrame, String)] = _ => Nil): Unit = {
     recoverSwapAll(intentFile)
-    val width = tables.headOption.fold(1)(t =>
-      math.min(tables.size, t._1.sparkSession.sparkContext.defaultParallelism))
-    DriverPool.map(tables, width) { case (df, path) =>
-      deleteRecursively(Paths.get(path + ".staging"))
-      df.write.mode("overwrite").parquet(path + ".staging")
+    val paths = stageWaves(tables, wave2)
+    writeIntent(paths, intentFile)
+    paths.foreach(swapStaged)
+    Files.delete(Paths.get(intentFile))
+  }
+
+  /** The stage phase of [[writeAtomicSwapAll]]: wave 1, then wave 2
+    * built over wave 1's staged dirs. Returns every staged path, wave
+    * 1 first. */
+  private[core] def stageWaves(tables: Seq[(DataFrame, String)],
+      wave2: (String => DataFrame) => Seq[(DataFrame, String)]): Seq[String] = {
+    stage(tables)
+    val parents = tables.map(_.swap).toMap
+    val second = wave2 { path =>
+      val parent = parents.getOrElse(path,
+        throw new IllegalArgumentException(s"$path is not a wave-1 output"))
+      parent.sparkSession.read.schema(parent.schema).parquet(path + ".staging")
     }
+    val paths = (tables ++ second).map(_._2)
+    require(paths.distinct.size == paths.size, s"a path is written twice: $paths")
+    stage(second)
+    paths
+  }
+
+  private def stage(tables: Seq[(DataFrame, String)]): Unit =
+    tables.headOption.foreach { case (df, _) =>
+      val width = math.min(tables.size, df.sparkSession.sparkContext.defaultParallelism)
+      DriverPool.map(tables, width) { case (df, path) =>
+        deleteRecursively(Paths.get(path + ".staging"))
+        df.write.mode("overwrite").parquet(path + ".staging")
+      }
+    }
+
+  private[core] def writeIntent(paths: Seq[String], intentFile: String): Unit = {
     val intent = Paths.get(intentFile)
     val tmp = Paths.get(intentFile + ".tmp")
-    Files.writeString(tmp, tables.map(_._2).mkString("\n"))
+    Files.writeString(tmp, paths.mkString("\n"))
     if (Files.exists(intent)) Files.delete(intent)
     Files.move(tmp, intent, StandardCopyOption.ATOMIC_MOVE)
-    tables.foreach { case (_, path) => swapStaged(path) }
-    Files.delete(intent)
+  }
+
+  /** A multi-table commit's outputs under one directory, by table
+    * name, in the two waves of [[writeAtomicSwapAll]]: `wave2` builds
+    * its frames from a reader over wave-1 outputs by name. */
+  final case class CommitPlan(wave1: Seq[(String, DataFrame)],
+      wave2: (String => DataFrame) => Seq[(String, DataFrame)]) {
+
+    /** Every output as a self-contained plan: wave 2 built over the
+      * wave-1 frames themselves, so it recomputes them. What a
+      * one-wave commit would run; the waves must write the same rows. */
+    def selfContained: Seq[(String, DataFrame)] = wave1 ++ wave2(wave1.toMap)
+
+    def commit(dir: String, intentFile: String): Unit = {
+      def at(outputs: Seq[(String, DataFrame)]) =
+        outputs.map { case (name, df) => (df, s"$dir/$name") }
+      writeAtomicSwapAll(at(wave1), intentFile,
+        staged => at(wave2(name => staged(s"$dir/$name"))))
+    }
   }
 
   /** Complete an interrupted [[writeAtomicSwapAll]]: for every path in

@@ -20,7 +20,8 @@ import graft.sources.Sources
   *  4. nucleotide mutation calling (D1) for the processed set
   *  5. deletion set = existing − feed (M4)
   *  6. sequence_identifier null-guarded update (M8 via coalescing upsert)
-  *  7. atomic-swap writes (M6)
+  *  7. atomic-swap writes (M6), staged in two waves: the mutation
+  *     merge reads the sequence table the first wave staged
   *
   * The reference's worker threads/bounded queue disappear: Spark
   * partitions are the batches. Its mafft/nextclade subprocess stages
@@ -102,8 +103,7 @@ object GisaidImport {
     println(s"[gisaid] final report: $report")
     require(report.success,
       s"import failed: ${report.failed} of ${report.processed} entries failed (>= 5%) — aborting before commit")
-    TableIO.writeAtomicSwapAll(outputs.map { case (n, df) => (df, s"$outDir/$n") },
-      s"$outDir/$SwapIntent")
+    outputs.commit(outDir, s"$outDir/$SwapIntent")
     report
   }
 
@@ -113,9 +113,10 @@ object GisaidImport {
     * scalar aggregations in two concurrent jobs — no O(table) driver
     * materialization). The returned frames are LAZY and may read the
     * live output tables; [[run]]'s staged commit executes them while
-    * those dirs are still untouched. */
+    * those dirs are still untouched. `selfContained` on the returned
+    * plan gives all three outputs as plans that stage nothing. */
   private[graft] def plan(spark: SparkSession, feedPath: String, existing: DataFrame,
-      identifiers: DataFrame, outDir: String): (Seq[(String, DataFrame)], ImportReport) = {
+      identifiers: DataFrame, outDir: String): (TableIO.CommitPlan, ImportReport) = {
     // 1. extract + drift check; an .xz feed (what GISAID actually
     // ships) routes through the chunker so the read is multi-task
     // instead of one unsplittable stream
@@ -195,26 +196,34 @@ object GisaidImport {
     // drop the reprocessed ids' old rows, union the fresh calls, and
     // semi-join against the final table so deleted records' mutations
     // go with them. A plain overwrite would silently orphan every
-    // unchanged sequence from its mutations on the second run.
+    // unchanged sequence from its mutations on the second run. The live
+    // table is resolved once, here; the commit leaves it untouched
+    // until every stage has run.
     val mutPath = s"$outDir/gisaid_api_sequence_mutation"
-    val mergedMutations =
-      if (TableIO.exists(spark, mutPath)) {
-        TableIO.read(spark, mutPath)
-          .join(toProcess.select(col("gisaid_epi_isl")), Seq("gisaid_epi_isl"), "left_anti")
-          .unionByName(mutations)
-          .join(finalTable.select(col("gisaid_epi_isl")), Seq("gisaid_epi_isl"), "left_semi")
-      } else mutations
+    val liveMutations =
+      if (TableIO.exists(spark, mutPath)) Some(TableIO.read(spark, mutPath)) else None
+    def mergedMutations(finalIds: DataFrame): DataFrame =
+      liveMutations.fold(mutations)(_
+        .join(toProcess.select(col("gisaid_epi_isl")), Seq("gisaid_epi_isl"), "left_anti")
+        .unionByName(mutations)
+        .join(finalIds, Seq("gisaid_epi_isl"), "left_semi"))
 
     // 7. the three serving outputs, committed by the caller through the
-    // staged multi-table swap: mergedMutations lazily reads the live
-    // mutation table and finalTable may read $outDir inputs in non-demo
-    // modes — the stage-everything-then-swap protocol executes these
-    // plans while every live dir is still the old version, so no
-    // materialization (and no executor-pinned blocks) is needed here
-    (Seq(
-      ("gisaid_api_sequence", finalTable.drop("seq_aligned")),
-      ("gisaid_api_sequence_mutation", mergedMutations),
-      ("sequence_identifier", mergedIds)),
+    // staged multi-table swap in two waves. Wave 1 is the sequence and
+    // identifier tables. Wave 2 is the mutation merge, which semi-joins
+    // against the sequence table wave 1 has just staged instead of
+    // re-running its upsert and delete semi-join in its own plan (and
+    // `kinds` is then built by one job, the sequence stage's). The
+    // merge reads the live mutation table and finalTable may read
+    // $outDir inputs in non-demo modes — the stage-everything-then-swap
+    // protocol executes these plans while every live dir is still the
+    // old version, so no materialization (and no executor-pinned
+    // blocks) is needed here
+    (TableIO.CommitPlan(
+      Seq(("gisaid_api_sequence", finalTable.drop("seq_aligned")),
+        ("sequence_identifier", mergedIds)),
+      staged => Seq(("gisaid_api_sequence_mutation", mergedMutations(
+        staged("gisaid_api_sequence").select(col("gisaid_epi_isl")))))),
       ImportReport(processedCnt, failedCnt, deletedCnt))
   }
 

@@ -14,6 +14,15 @@ import graft.core.{DriverPool, TableIO}
   * Spark jobs) — the replacement for `refresh_all_mv()`
   * (`spectrum/refreshes.sql:14-36`).
   *
+  * The commit stages in two waves. Wave 1 is
+  * `spectrum_sequence_public_meta` and every output that does not read
+  * it. Wave 2 is meta's four readers (aa and nucleotide mutations,
+  * intensity, lineage mutation counts), built over the meta rows wave 1
+  * has just staged, as the reference's matviews read the meta matview.
+  * So a refresh computes meta — the consensus dedup plus every foreign
+  * GISAID record — once, not five times. Every other input is read
+  * from `inDir`, which the commit does not touch.
+  *
   * Usage: SpectrumRefresh <inDir> <outDir>   (parquet domain tables)
   *        SpectrumRefresh --demo <outDir>    (synthesized demo tables)
   */
@@ -31,12 +40,17 @@ object SpectrumRefresh {
     * `refresh_all_mv()` runs as the importer's last stage). */
   def run(spark: SparkSession, inDir: String, outDir: String): Unit = {
     TableIO.recoverSwapAll(s"$outDir/_swap_intent") // finish any interrupted commit
-    val t = tables(spark, inDir)
-    val views = SpectrumViews.buildAll(
-      t("consensus_sequence"), t("sequence_identifier"), t("viollier_test"),
-      t("gisaid_api_sequence"), t("nuc_mutations"), t("aa_mutations"),
-      t("ext_owid_global_cases"), t("spectrum_country"), t("bag_dashboard_meldeformular"),
-      startDate = "2021-03-01", endDate = "2021-03-31")
+    plan(tables(spark, inDir)).commit(outDir, s"$outDir/_swap_intent")
+  }
+
+  /** Every output's plan over the resolved input tables, in the
+    * commit's two waves: wave 1 is `spectrum_sequence_public_meta`
+    * plus every output that does not read it, wave 2 the four views
+    * of meta ([[SpectrumViews.metaViews]]), built over the meta rows
+    * wave 1 staged. */
+  private[jobs] def plan(t: Map[String, DataFrame]): TableIO.CommitPlan = {
+    val meta = SpectrumViews.sequencePublicMeta(t("consensus_sequence"),
+      t("sequence_identifier"), t("viollier_test"), t("gisaid_api_sequence"))
     // usage-statistics view refreshes only when the usage feed exists
     val usageViews: Map[String, DataFrame] =
       if (t.contains("spectrum_usage_os"))
@@ -72,11 +86,17 @@ object SpectrumRefresh {
     // view first — plans read inDir, untouched during staging — then
     // swap in a tight rename loop with forward recovery, so readers
     // never keep a mixed-version set of views (the GisaidImport commit
-    // discipline applied to the serving side)
-    val allViews = (views ++ usageViews ++ privateViews ++ reports).toSeq.sortBy(_._1)
-    TableIO.writeAtomicSwapAll(
-      allViews.map { case (name, df) => (df, s"$outDir/$name") },
-      s"$outDir/_swap_intent")
+    // discipline applied to the serving side). Meta stages first: it
+    // is wave 1's heaviest plan, and wave 2 starts only once all of
+    // wave 1 has been staged.
+    val wave1 = ("spectrum_sequence_public_meta" -> meta) +: (Map(
+      "spectrum_swiss_cases" -> SpectrumViews.swissCases(t("bag_dashboard_meldeformular"))) ++
+      usageViews ++ privateViews ++ reports).toSeq.sortBy(_._1)
+    TableIO.CommitPlan(wave1, staged =>
+      SpectrumViews.metaViews(staged("spectrum_sequence_public_meta"),
+        t("nuc_mutations"), t("aa_mutations"), t("ext_owid_global_cases"),
+        t("spectrum_country"), startDate = "2021-03-01", endDate = "2021-03-31")
+        .toSeq.sortBy(_._1))
   }
 
   /** Armee marker derived from data, never synthesized: the import
@@ -91,7 +111,7 @@ object SpectrumRefresh {
         coalesce(col("comment").like("%auftraggeber_armee=TRUE%"), lit(false)))
     else bag
 
-  private def tables(spark: SparkSession, inDir: String): Map[String, DataFrame] =
+  private[jobs] def tables(spark: SparkSession, inDir: String): Map[String, DataFrame] =
     if (inDir == "--demo") demoTables(spark)
     else {
       val required = Seq("consensus_sequence", "sequence_identifier", "viollier_test",

@@ -575,9 +575,18 @@ class PlanAuditSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("import-plan-")
     val (feedPath, existing) = graft.jobs.GisaidImport.demoFeedAndExisting(spark, dir)
     val ids = Seq((16160L, "EPI_ISL_OLD", "existing")).toDF("ethid", "gisaid_id", "note")
-    val (outputs, report) =
+    // a first commit, so the plan below merges with a live mutation
+    // table instead of writing the fresh calls alone
+    graft.jobs.GisaidImport.run(spark, feedPath, existing, ids, s"$dir/tables")
+    val (plan, report) =
       graft.jobs.GisaidImport.plan(spark, feedPath, existing, ids, s"$dir/tables")
     assert(report.processed > 0)
+    // wave 2, the mutation merge, both self-contained and as the commit
+    // builds it: over a parquet read of the sequence table
+    val outputs = plan.selfContained ++
+      plan.wave2(n => graft.core.TableIO.read(spark, s"$dir/tables/$n"))
+    assert(outputs.map(_._1).toSet == Set("gisaid_api_sequence",
+      "gisaid_api_sequence_mutation", "sequence_identifier"))
     outputs.foreach { case (name, df) =>
       val leaves = df.queryExecution.analyzed.collect {
         case r: org.apache.spark.sql.execution.LogicalRDD => r.schema.fieldNames.toSeq.sorted

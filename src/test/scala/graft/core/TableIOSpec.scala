@@ -6,6 +6,17 @@ import java.nio.file.Files
 
 class TableIOSpec extends SparkSpec {
 
+  private def value(path: String): String = TableIO.read(spark, path).collect()(0).getString(1)
+
+  // the pool's threads exit once it terminates; a leaked pool never would
+  private def assertNoPoolThreads(): Unit = {
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName.startsWith("graft-driver-pool-"))
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while (poolThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(poolThreads.isEmpty, poolThreads.map(_.getName).mkString(", "))
+  }
+
   test("M6 atomic swap: readers see old or new, rollback restores") {
     import spark.implicits._
     val dir = Files.createTempDirectory("tableio").toString
@@ -80,12 +91,7 @@ class TableIOSpec extends SparkSpec {
       .exists(t => String.valueOf(t.getMessage).contains(planted)), e)
     assert(!Files.exists(java.nio.file.Paths.get(intent)), "no swap intent after a failed stage")
     for (p <- paths) assert(TableIO.read(spark, p).collect()(0).getString(1) == s"$p-v1")
-    // the pool's threads exit once it terminates; a leaked pool never would
-    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
-      .filter(t => t.isAlive && t.getName.startsWith("graft-driver-pool-"))
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while (poolThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
-    assert(poolThreads.isEmpty, poolThreads.map(_.getName).mkString(", "))
+    assertNoPoolThreads()
   }
 
   test("crash between swaps: recoverSwapAll rolls the commit forward to a consistent set") {
@@ -108,6 +114,115 @@ class TableIOSpec extends SparkSpec {
     assert(TableIO.read(spark, b).collect()(0).getString(1) == "b-v2")
     assert(!Files.exists(java.nio.file.Paths.get(intent)))
     assert(!TableIO.recoverSwapAll(intent), "recovery is idempotent / no-op without intent")
+  }
+
+  test("waves: a wave-2 output reads its parent's staged rows, a wave-1 output the old live dir") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("swapwaves").toString
+    val (a, b, c) = (s"$dir/a", s"$dir/b", s"$dir/c")
+    val intent = s"$dir/_swap_intent"
+    TableIO.writeAtomicSwapAll(Seq(
+      (Seq((1, "a-v1")).toDF("k", "v"), a),
+      (Seq((1, "b-v1")).toDF("k", "v"), b)), intent)
+    TableIO.writeAtomicSwapAll(Seq(
+        (Seq((1, "a-v2")).toDF("k", "v"), a),
+        (TableIO.read(spark, a).withColumn("v", concat(col("v"), lit("+seen-by-b"))), b)),
+      intent,
+      staged => Seq((staged(a).withColumn("v", concat(col("v"), lit("+seen-by-c"))), c)))
+    assert(value(a) == "a-v2")
+    assert(value(b) == "a-v1+seen-by-b", "wave 1 reads the live dir, untouched while staging")
+    assert(value(c) == "a-v2+seen-by-c", "wave 2 reads the rows wave 1 staged")
+    assert(!Files.exists(java.nio.file.Paths.get(intent)))
+    assert(Seq(a, b, c).forall(p => !Files.exists(java.nio.file.Paths.get(s"$p.staging"))))
+    // a wave-2 frame may only read wave-1 outputs
+    val e = intercept[IllegalArgumentException] {
+      TableIO.writeAtomicSwapAll(Seq((Seq((1, "a-v3")).toDF("k", "v"), a)), intent,
+        staged => Seq((staged(b), c)))
+    }
+    assert(e.getMessage.contains("not a wave-1 output"), e)
+    assert(!Files.exists(java.nio.file.Paths.get(intent)))
+    assert(value(a) == "a-v2" && value(c) == "a-v2+seen-by-c")
+  }
+
+  test("waves: a failed parent stage builds no wave-2 plan, writes no intent, swaps nothing") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("swapwavefail").toString
+    val paths @ Seq(a, b, c) = Seq("a", "b", "c").map(n => s"$dir/$n")
+    val intent = s"$dir/_swap_intent"
+    TableIO.writeAtomicSwapAll(paths.map(p => (Seq((1, s"$p-v1")).toDF("k", "v"), p)), intent)
+    val planted = "planted parent failure"
+    val boom = udf((k: Long) => { if (k >= 0) throw new IllegalStateException(planted); k })
+    var built = false
+    val e = intercept[Exception] {
+      TableIO.writeAtomicSwapAll(Seq(
+          (spark.range(1).select(boom(col("id")).as("k"), lit("a-v2").as("v")), a),
+          (Seq((1, "b-v2")).toDF("k", "v"), b)),
+        intent,
+        staged => { built = true; Seq((staged(a), c)) })
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(planted)), e)
+    assert(!built, "no wave-2 plan is built after a failed wave-1 stage")
+    assert(!Files.exists(java.nio.file.Paths.get(intent)), "no swap intent after a failed stage")
+    for (p <- paths) assert(value(p) == s"$p-v1")
+    assertNoPoolThreads()
+  }
+
+  test("waves: a crash after the intent is written rolls wave-2 tables forward") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("swapwavecrash").toString
+    val (a, c) = (s"$dir/a", s"$dir/c")
+    val intent = s"$dir/_swap_intent"
+    Seq((1, "a-v1")).toDF("k", "v").write.parquet(a)
+    Seq((1, "c-v1")).toDF("k", "v").write.parquet(c)
+    // writeAtomicSwapAll's steps up to the crash: both waves staged,
+    // the intent recorded, the first swap done, then the JVM dies
+    val paths = TableIO.stageWaves(Seq((Seq((1, "a-v2")).toDF("k", "v"), a)),
+      staged => Seq((staged(a).withColumn("v", concat(col("v"), lit("+c"))), c)))
+    assert(paths == Seq(a, c))
+    TableIO.writeIntent(paths, intent)
+    TableIO.swapStaged(a)
+    assert(value(c) == "c-v1", "premise: a mixed-version set until recovery")
+    assert(TableIO.recoverSwapAll(intent))
+    assert(value(a) == "a-v2")
+    assert(value(c) == "a-v2+c")
+    assert(!Files.exists(java.nio.file.Paths.get(intent)))
+  }
+
+  test("waves: building the wave-2 plans starts no Spark job") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("swapwavejobs").toString
+    val (a, b, c) = (s"$dir/a", s"$dir/b", s"$dir/c")
+    val Phase = "graft.test.phase"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String] // phase per started job
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Phase))).foreach(jobs.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      TableIO.writeAtomicSwapAll(Seq(
+          (Seq((1, "x"), (2, "y")).toDF("k", "v"), a),
+          (Seq((1, 10L), (3, 30L)).toDF("k", "n"), b)),
+        s"$dir/_swap_intent",
+        staged => {
+          sc.setLocalProperty(Phase, "wave2-build")
+          try Seq((staged(a).join(staged(b), Seq("k"), "left")
+            .groupBy(col("v")).agg(sum(coalesce(col("n"), lit(0L))).as("n")), c))
+          finally sc.setLocalProperty(Phase, null)
+        })
+      // listener events arrive in order: once a marker job is seen,
+      // every job the build could have started has been seen too
+      sc.setLocalProperty(Phase, "marker")
+      try spark.range(1).count() finally sc.setLocalProperty(Phase, null)
+      val deadline = System.nanoTime() + 60_000_000_000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains("marker"), "listener bus did not drain within 60 s")
+      assert(!jobs.contains("wave2-build"), s"jobs started while building wave 2: $jobs")
+      assert(TableIO.read(spark, c).as[(String, Long)].collect().toSet == Set(("x", 10L), ("y", 0L)))
+    } finally sc.removeSparkListener(listener)
   }
 
   test("bucketed tables join with zero shuffle (the SCALING.md co-location contract)") {

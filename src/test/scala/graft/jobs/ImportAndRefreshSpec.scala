@@ -97,8 +97,9 @@ class ImportAndRefreshSpec extends SparkSpec {
     val feed = dir.resolve("feed.json")
     java.nio.file.Files.writeString(feed, lines.mkString("\n"))
     val ids = Seq((16160L, "EPI_ISL_OLD", "existing")).toDF("ethid", "gisaid_id", "note")
-    val (outputs, report) =
+    val (plan, report) =
       GisaidImport.plan(spark, feed.toString, existing, ids, s"$dir/tables")
+    val outputs = plan.selfContained
     // the failed entry is accounted (GisaidApiImporter.java counts a
     // throwing entry as failed) but its id was IN the data package, so
     // deletion must not touch it (GisaidApiImporter.java:374-381)
