@@ -29,9 +29,10 @@ import org.apache.spark.sql.types.StructType
   * between rounds, and production tables are rewritten under stable
   * paths too — a key carrying only the source PATH would serve a
   * model trained on the previous files. Disk-tier keys therefore fold
-  * in [[sourceFingerprint]] (size + mtime of every file under the
-  * source dir): regenerating the inputs changes the fingerprint,
-  * which changes the key, which makes the next call retrain. Old
+  * in [[TableIO.fingerprint]] of the source dir (relative path, size
+  * and mtime of every file under it): regenerating the inputs changes
+  * the fingerprint, which changes the key, which makes the next call
+  * retrain. Old
   * artifacts are left behind (content-addressed stores don't mutate);
   * the artifact root is a cache dir, not a registry.
   *
@@ -50,27 +51,6 @@ object TrainOnce {
     * bench's fork children (env is inherited). */
   def artifactRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_DIR", "/tmp/graft_artifacts")
-
-  /** Cheap content fingerprint of the dataset behind `dir`: an
-    * order-independent fold of (file name, length, mtime) over every
-    * file under it, via the Hadoop FileSystem so it is correct on any
-    * scheme. O(#files) driver-side metadata calls — no data read. */
-  def sourceFingerprint(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return "absent"
-    var acc = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      var h = 1125899906842597L
-      val s = s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
-      var i = 0
-      while (i < s.length) { h = h * 31 + s.charAt(i); i += 1 }
-      acc += h // commutative: listing order varies across filesystems
-    }
-    java.lang.Long.toHexString(acc)
-  }
 
   private def lockFor(key: String): Object = locks.getOrElseUpdate(key, new Object)
 
@@ -168,7 +148,7 @@ object TrainOnce {
     * the artifact. Column order is pinned to `schema`. */
   def cachedOnDisk(spark: SparkSession, key: String, srcDir: String,
       schema: StructType)(train: => DataFrame): DataFrame = {
-    val fullKey = s"$key@${sourceFingerprint(spark, srcDir)}"
+    val fullKey = s"$key@${TableIO.fingerprint(spark, srcDir)}"
     val rows = cache.get(fullKey) match {
       case Some(v) => v
       case None => lockFor(fullKey).synchronized {

@@ -99,12 +99,14 @@ object GisaidImport {
   def run(spark: SparkSession, feedPath: String, existing: DataFrame,
       identifiers: DataFrame, outDir: String): ImportReport = {
     TableIO.recoverSwapAll(s"$outDir/$SwapIntent") // finish any interrupted commit first
-    val (outputs, report) = plan(spark, feedPath, existing, identifiers, outDir)
-    println(s"[gisaid] final report: $report")
-    require(report.success,
-      s"import failed: ${report.failed} of ${report.processed} entries failed (>= 5%) — aborting before commit")
-    outputs.commit(outDir, s"$outDir/$SwapIntent")
-    report
+    val (outputs, report, kinds) = plan(spark, feedPath, existing, identifiers, outDir)
+    try {
+      println(s"[gisaid] final report: $report")
+      require(report.success,
+        s"import failed: ${report.failed} of ${report.processed} entries failed (>= 5%) — aborting before commit")
+      outputs.commit(outDir, s"$outDir/$SwapIntent")
+      report
+    } finally kinds.unpersist()
   }
 
   private[jobs] val SwapIntent = "_swap_intent"
@@ -114,9 +116,12 @@ object GisaidImport {
     * materialization). The returned frames are LAZY and may read the
     * live output tables; [[run]]'s staged commit executes them while
     * those dirs are still untouched. `selfContained` on the returned
-    * plan gives all three outputs as plans that stage nothing. */
+    * plan gives all three outputs as plans that stage nothing. The
+    * third value is the cached change-detection frame the outputs
+    * share; the caller unpersists it once they are committed or
+    * dropped. */
   private[graft] def plan(spark: SparkSession, feedPath: String, existing: DataFrame,
-      identifiers: DataFrame, outDir: String): (TableIO.CommitPlan, ImportReport) = {
+      identifiers: DataFrame, outDir: String): (TableIO.CommitPlan, ImportReport, DataFrame) = {
     // 1. extract + drift check; an .xz feed (what GISAID actually
     // ships) routes through the chunker so the read is multi-task
     // instead of one unsplittable stream
@@ -224,7 +229,7 @@ object GisaidImport {
         ("sequence_identifier", mergedIds)),
       staged => Seq(("gisaid_api_sequence_mutation", mergedMutations(
         staged("gisaid_api_sequence").select(col("gisaid_epi_isl")))))),
-      ImportReport(processedCnt, failedCnt, deletedCnt))
+      ImportReport(processedCnt, failedCnt, deletedCnt), kinds)
   }
 
   /** Demo inputs: a JSON-lines feed (new + changed + unchanged +

@@ -2,7 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.SparkSession
 import graft.GraftSession
-import graft.core.{TableIO, TrainOnce}
+import graft.core.TableIO
 import graft.sources.StateStore
 
 /** The import→refresh chain the reference hard-codes — GISAID importer
@@ -22,10 +22,10 @@ import graft.sources.StateStore
   *   state/    M9 per-job fingerprints
   * }}}
   *
-  * Fingerprints: the import keys on the FEED dir, the refresh on the
-  * TABLES dir — evaluated lazily, so when the import runs, the refresh
-  * sees the just-written tables as changed and runs too; when the feed
-  * is unchanged, both skip.
+  * Fingerprints ([[TableIO.fingerprint]]): the import keys on the FEED
+  * dir, the refresh on the TABLES dir — evaluated lazily, so when the
+  * import runs, the refresh sees the just-written tables as changed
+  * and runs too; when the feed is unchanged, both skip.
   *
   * Usage: ImportAndRefresh --demo <dir>
   */
@@ -52,14 +52,14 @@ object ImportAndRefresh {
     val state = new StateStore(s"$dir/state")
     JobRunner.runOrdered(state, Seq(
       JobSpec("gisaid_import",
-        fingerprint = () => TrainOnce.sourceFingerprint(spark, feedDir.toString),
+        fingerprint = () => TableIO.fingerprint(spark, feedDir.toString),
         run = () => GisaidImport.run(spark, feedPath, existing,
           TableIO.read(spark, s"$tablesDir/sequence_identifier"), tablesDir)),
       JobSpec("quality_gate",
-        fingerprint = () => TrainOnce.sourceFingerprint(spark, tablesDir),
+        fingerprint = () => TableIO.fingerprint(spark, tablesDir),
         run = () => qualityGate(spark, tablesDir)),
       JobSpec("spectrum_refresh",
-        fingerprint = () => TrainOnce.sourceFingerprint(spark, tablesDir),
+        fingerprint = () => TableIO.fingerprint(spark, tablesDir),
         run = () => SpectrumRefresh.run(spark, tablesDir, viewsDir))))
   }
 

@@ -4,8 +4,9 @@ import graft.sources.StateStore
 
 /** One schedulable unit: a name, a content fingerprint of its INPUTS
   * (evaluated lazily, at the moment the job is considered — so a
-  * downstream job sees the files its upstream just wrote), and the
-  * work itself. */
+  * downstream job sees the files its upstream just wrote; the chains
+  * use [[graft.core.TableIO.fingerprint]] of their input dirs), and
+  * the work itself. */
 final case class JobSpec(name: String, fingerprint: () => String, run: () => Unit)
 
 /** §7.1's scheduler shell — the thin ordered-job runner the reference

@@ -121,11 +121,11 @@ object SpectrumRefresh {
       val optional = Seq("swiss_canton", "bag_meldeformular",
         "consensus_sequence_nextclade_data", "spectrum_usage_os")
         .filter(n => TableIO.exists(spark, s"$inDir/$n"))
-      // each resolution runs its own schema-inference job: resolve
-      // them concurrently
+      // an unchanged input is a memo hit; each changed one runs its
+      // own schema-inference job: resolve them concurrently
       val names = required ++ optional
       val width = math.min(names.size, spark.sparkContext.defaultParallelism)
-      DriverPool.map(names, width)(n => n -> spark.read.parquet(s"$inDir/$n")).toMap
+      DriverPool.map(names, width)(n => n -> TableIO.read(spark, s"$inDir/$n")).toMap
     }
 
   /** FIXTURES.md-shaped deterministic demo tables (seed-free: derived

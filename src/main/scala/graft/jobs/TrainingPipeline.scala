@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.GraftSession
-import graft.core.{TableIO, TrainOnce}
+import graft.core.TableIO
 import graft.operators.NgramLm
 import graft.sources.StateStore
 
@@ -90,16 +90,16 @@ object TrainingPipeline {
 
     JobRunner.runOrdered(state, Seq(
       JobSpec("curate",
-        fingerprint = () => TrainOnce.sourceFingerprint(spark, docsDir),
+        fingerprint = () => TableIO.fingerprint(spark, docsDir),
         run = () => curate()),
       JobSpec("tokenizer",
-        fingerprint = () => TrainOnce.sourceFingerprint(spark, curatedDir),
+        fingerprint = () => TableIO.fingerprint(spark, curatedDir),
         run = () => tokenizer()),
       JobSpec("mix",
-        fingerprint = () => TrainOnce.sourceFingerprint(spark, curatedDir),
+        fingerprint = () => TableIO.fingerprint(spark, curatedDir),
         run = () => mix()),
       JobSpec("export",
-        fingerprint = () => TrainOnce.sourceFingerprint(spark, mixDir),
+        fingerprint = () => TableIO.fingerprint(spark, mixDir),
         run = () => export())))
   }
 }

@@ -255,7 +255,7 @@ object BpeQueries extends QueryModule {
   // changes the fingerprint and retrains; distinct sf dirs and spec
   // fixtures never collide (the dir is part of the key).
   private def artifact(s: SparkSession, d: String): (String, String) = {
-    val key = s"bpe:$NMerges:$d@${graft.core.TrainOnce.sourceFingerprint(s, d)}"
+    val key = s"bpe:$NMerges:$d@${graft.core.TableIO.fingerprint(s, d)}"
     val base = graft.core.TrainOnce.artifactDir(key) { tmp =>
       val (merges, toks) =
         Bpe.train(Bpe.wordFrequencies(Tables.documents(s, d), "text"), NMerges)

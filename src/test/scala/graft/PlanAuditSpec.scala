@@ -578,7 +578,7 @@ class PlanAuditSpec extends SparkSpec {
     // a first commit, so the plan below merges with a live mutation
     // table instead of writing the fresh calls alone
     graft.jobs.GisaidImport.run(spark, feedPath, existing, ids, s"$dir/tables")
-    val (plan, report) =
+    val (plan, report, _) =
       graft.jobs.GisaidImport.plan(spark, feedPath, existing, ids, s"$dir/tables")
     assert(report.processed > 0)
     // wave 2, the mutation merge, both self-contained and as the commit

@@ -191,38 +191,84 @@ class TableIOSpec extends SparkSpec {
 
   test("waves: building the wave-2 plans starts no Spark job") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = Files.createTempDirectory("swapwavejobs").toString
     val (a, b, c) = (s"$dir/a", s"$dir/b", s"$dir/c")
-    val Phase = "graft.test.phase"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String] // phase per started job
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(Phase))).foreach(jobs.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      TableIO.writeAtomicSwapAll(Seq(
-          (Seq((1, "x"), (2, "y")).toDF("k", "v"), a),
-          (Seq((1, 10L), (3, 30L)).toDF("k", "n"), b)),
-        s"$dir/_swap_intent",
-        staged => {
-          sc.setLocalProperty(Phase, "wave2-build")
-          try Seq((staged(a).join(staged(b), Seq("k"), "left")
+    var built: Seq[Option[String]] = null
+    TableIO.writeAtomicSwapAll(Seq(
+        (Seq((1, "x"), (2, "y")).toDF("k", "v"), a),
+        (Seq((1, 10L), (3, 30L)).toDF("k", "n"), b)),
+      s"$dir/_swap_intent",
+      staged => {
+        var plans: Seq[(org.apache.spark.sql.DataFrame, String)] = Nil
+        built = jobsStartedBy {
+          plans = Seq((staged(a).join(staged(b), Seq("k"), "left")
             .groupBy(col("v")).agg(sum(coalesce(col("n"), lit(0L))).as("n")), c))
-          finally sc.setLocalProperty(Phase, null)
-        })
-      // listener events arrive in order: once a marker job is seen,
-      // every job the build could have started has been seen too
-      sc.setLocalProperty(Phase, "marker")
-      try spark.range(1).count() finally sc.setLocalProperty(Phase, null)
-      val deadline = System.nanoTime() + 60_000_000_000L
-      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.contains("marker"), "listener bus did not drain within 60 s")
-      assert(!jobs.contains("wave2-build"), s"jobs started while building wave 2: $jobs")
-      assert(TableIO.read(spark, c).as[(String, Long)].collect().toSet == Set(("x", 10L), ("y", 0L)))
-    } finally sc.removeSparkListener(listener)
+        }
+        plans
+      })
+    assert(built.isEmpty, s"jobs started while building wave 2: $built")
+    assert(TableIO.read(spark, c).as[(String, Long)].collect().toSet == Set(("x", 10L), ("y", 0L)))
+  }
+
+  test("fingerprint: sub-ms and nested rewrites, swapped same-named files, file: URIs, absent") {
+    import java.nio.file.attribute.FileTime
+    import java.util.concurrent.TimeUnit.NANOSECONDS
+    val root = Files.createTempDirectory("fingerprint")
+    def fp = TableIO.fingerprint(spark, root.toString)
+    def put(rel: String, body: String, mtimeNs: Long): Unit = {
+      val f = root.resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, body)
+      Files.setLastModifiedTime(f, FileTime.from(mtimeNs, NANOSECONDS))
+    }
+    val t0 = 1_700_000_000_000_000_000L
+    put("top.parquet", "aaaa", t0)
+    put("x/part-0.parquet", "abc", t0)
+    put("y/part-0.parquet", "abcde", t0)
+    put("d1/d2/part-0.parquet", "deep", t0)
+    val before = fp
+    // a same-size rewrite 500 ns later: the same millisecond
+    put("top.parquet", "bbbb", t0 + 500)
+    assert(Files.getLastModifiedTime(root.resolve("top.parquet")).to(NANOSECONDS) == t0 + 500,
+      "premise: the filesystem keeps ns mtimes")
+    val subMs = fp
+    assert(subMs != before, "a same-size rewrite within one ms")
+    // a rewrite two directory levels down
+    put("d1/d2/part-0.parquet", "deeper", t0)
+    val nested = fp
+    assert(nested != subMs, "a nested rewrite")
+    // same-named files in sibling dirs swap contents of different sizes
+    put("x/part-0.parquet", "abcde", t0)
+    put("y/part-0.parquet", "abc", t0)
+    assert(fp != nested, "swapped same-named files")
+    // a file: URI fingerprints like its bare path
+    assert(TableIO.fingerprint(spark, s"file://$root") == fp)
+    assert(TableIO.fingerprint(spark, s"$root/nope") == "absent")
+  }
+
+  test("read: one plan per unchanged path, on a file: URI too; rewrites and session switches re-resolve") {
+    import spark.implicits._
+    val path = s"${Files.createTempDirectory("readmemo")}/t"
+    Seq((1, "v1")).toDF("k", "v").write.parquet(path)
+    val paths = Seq(path, s"file://$path")
+    val first = paths.map(p => TableIO.read(spark, p))
+    for ((p, df) <- paths.zip(first)) {
+      var again: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsStartedBy { again = TableIO.read(spark, p) }
+      assert(again eq df, s"$p: a second read of an unchanged path is the memoized plan")
+      assert(jobs.isEmpty, s"$p: a memo hit starts no job: $jobs")
+    }
+    TableIO.writeAtomicSwap(Seq((1, "v2")).toDF("k", "v"), path)
+    for ((p, df) <- paths.zip(first)) {
+      val fresh = TableIO.read(spark, p)
+      assert(!(fresh eq df), s"$p: a rewrite re-resolves")
+      assert(fresh.collect()(0).getString(1) == "v2")
+    }
+    val current = TableIO.read(spark, path)
+    val other = spark.newSession()
+    val switched = TableIO.read(other, path)
+    assert(switched.sparkSession eq other, "a session is served its own plan")
+    assert(!(TableIO.read(spark, path) eq current), "a switch drops the old session's plans")
   }
 
   test("bucketed tables join with zero shuffle (the SCALING.md co-location contract)") {

@@ -14,6 +14,14 @@ class ImportAndRefreshSpec extends SparkSpec {
   private def outcomes(dir: String): Seq[(String, String)] =
     ImportAndRefresh.chain(spark, dir).map { case (n, o) => n -> o.tag }
 
+  // the session's cache entries are cleared first, so any left after
+  // `f` were added by it
+  private def leavesNothingCached(f: => Unit): Boolean = {
+    spark.catalog.clearCache()
+    f
+    spark.sharedState.cacheManager.isEmpty
+  }
+
   test("import → refresh chain: runs in order, refresh reads the imported table, reruns skip") {
     val dir = java.nio.file.Files.createTempDirectory("chain-spec-").toString
 
@@ -50,6 +58,21 @@ class ImportAndRefreshSpec extends SparkSpec {
       "quality_gate" -> "ran", "spectrum_refresh" -> "ran"))
   }
 
+  test("refresh resolution: unchanged inputs start no inference job, a rewritten one exactly one") {
+    val dir = java.nio.file.Files.createTempDirectory("refresh-resolve-").toString
+    val demo = SpectrumRefresh.demoTables(spark)
+    val inputs = Seq("consensus_sequence", "sequence_identifier", "viollier_test",
+      "gisaid_api_sequence", "nuc_mutations", "aa_mutations", "ext_owid_global_cases",
+      "spectrum_country", "bag_dashboard_meldeformular", "bag_test_numbers")
+    inputs.foreach(n => demo(n).write.parquet(s"$dir/in/$n"))
+    def inferenceJobs = jobsStartedBy(SpectrumRefresh.run(spark, s"$dir/in", s"$dir/out"))
+      .count(_.isEmpty)
+    SpectrumRefresh.tables(spark, s"$dir/in")
+    assert(inferenceJobs == 0, "every input unchanged")
+    demo("spectrum_country").write.mode("overwrite").parquet(s"$dir/in/spectrum_country")
+    assert(inferenceJobs == 1, "one input rewritten")
+  }
+
   test("quality gate: structurally broken serving tables fail the stage loudly") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("qgate-").toString
@@ -73,7 +96,10 @@ class ImportAndRefreshSpec extends SparkSpec {
     val (feedPath, existing) = GisaidImport.demoFeedAndExisting(spark, dir)
     val ids = Seq((16160L, "EPI_ISL_OLD", "existing"), (16200L, null, "pending"))
       .toDF("ethid", "gisaid_id", "note")
-    val report = GisaidImport.run(spark, feedPath, existing, ids, s"$dir/tables")
+    var report: GisaidImport.ImportReport = null
+    assert(leavesNothingCached {
+      report = GisaidImport.run(spark, feedPath, existing, ids, s"$dir/tables")
+    }, "a committed import leaves nothing cached")
     // demo feed: 200 records all valid; existing ids 150..250 of which
     // 201..250 are absent from the feed → 50 deletions
     assert(report == GisaidImport.ImportReport(processed = 200, failed = 0, deleted = 50))
@@ -97,7 +123,7 @@ class ImportAndRefreshSpec extends SparkSpec {
     val feed = dir.resolve("feed.json")
     java.nio.file.Files.writeString(feed, lines.mkString("\n"))
     val ids = Seq((16160L, "EPI_ISL_OLD", "existing")).toDF("ethid", "gisaid_id", "note")
-    val (plan, report) =
+    val (plan, report, _) =
       GisaidImport.plan(spark, feed.toString, existing, ids, s"$dir/tables")
     val outputs = plan.selfContained
     // the failed entry is accounted (GisaidApiImporter.java counts a
@@ -129,12 +155,15 @@ class ImportAndRefreshSpec extends SparkSpec {
     val (_, existing) = GisaidImport.demoFeedAndExisting(spark, dir.resolve("unused-feed"))
     val ids = Seq((16160L, "EPI_ISL_OLD", "existing")).toDF("ethid", "gisaid_id", "note")
     val state = new StateStore(s"$dir/state")
-    val outcomes = JobRunner.runOrdered(state, Seq(
-      JobSpec("gisaid_import", () => "fp-import",
-        () => GisaidImport.run(spark, feed.toString, existing, ids, tablesDir)),
-      JobSpec("spectrum_refresh", () => "fp-refresh",
-        () => fail("refresh must not run after a failed import"))))
-      .map { case (n, o) => n -> o.tag }
+    var outcomes: Seq[(String, String)] = Nil
+    assert(leavesNothingCached {
+      outcomes = JobRunner.runOrdered(state, Seq(
+        JobSpec("gisaid_import", () => "fp-import",
+          () => GisaidImport.run(spark, feed.toString, existing, ids, tablesDir)),
+        JobSpec("spectrum_refresh", () => "fp-refresh",
+          () => fail("refresh must not run after a failed import"))))
+        .map { case (n, o) => n -> o.tag }
+    }, "an aborted import leaves nothing cached")
     assert(outcomes == Seq("gisaid_import" -> "failed", "spectrum_refresh" -> "blocked"))
     // the abort happened BEFORE the commit point: nothing was swapped
     assert(!graft.core.TableIO.exists(spark, s"$tablesDir/gisaid_api_sequence"),
