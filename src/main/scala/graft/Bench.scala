@@ -1,5 +1,13 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.collection.mutable
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop
   * sink (count() can short-circuit to metadata for scans). One warmup
@@ -8,6 +16,22 @@ package graft
   * execution — cached frames surviving across queries previously
   * caused 10–20 s GC/eviction stalls landing on random queries.
   * Prints ONE JSON line.
+  *
+  * Profile: every gate's last timed pass is also profiled — frame
+  * construction (time and jobs: iterative operators run their eager
+  * `localCheckpoint` rounds there), the write's analysis /
+  * optimization / planning phases from its `queryExecution.tracker`,
+  * execution (time and jobs), the top stages by wall time (tasks, task
+  * run and CPU time, shuffle bytes, spill, graft call site), the
+  * plan-shape counts of every execution it ran
+  * (`CardinalityAudit.planShape`) and its largest join and generate
+  * outputs. Each gate prints one `[profile] <gate> …` line to stderr
+  * and the records go into the self-record under `"profile"`, so
+  * `SPARK_GRAFT_ONLY=q_a,q_b sbt "runMain graft.Bench"` answers "where
+  * did the time go, and did the plan change?" for any gate set. It has
+  * no switch: the listeners run on Spark's async listener bus and the
+  * one drain per gate runs after the timer stops, so the timed span
+  * (construction + noop write) is what it was without the profile.
   *
   * JVM hygiene: a single JVM running the whole (125-query) suite
   * accumulates JIT/codegen-cache/heap pressure that inflates
@@ -36,14 +60,15 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
     val isChild = sys.env.contains("SPARK_GRAFT_FORK_CHILD")
     // the runtime cardinality audit (graft.plans.CardinalityAudit:
-    // join fanout + generate fanout + exchange skew) rides every bench
-    // run: children append violations to one shared file (inherited
-    // env), the parent clears it first and reads it back after the
-    // last group — so the committed bench can never again carry a
-    // silent near-cartesian the way the fz28 first cut did
+    // join fanout + generate fanout + exchange skew) and the per-gate
+    // profile ride every bench run: children append their violation
+    // and profile lines to one shared file (inherited env), the parent
+    // clears it first and reads it back after the last group — so the
+    // committed bench can never again carry a silent near-cartesian
+    // the way the fz28 first cut did
     if (!isChild)
       try java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(fanoutPath))
+        java.nio.file.Paths.get(runFilePath))
       catch { case _: Exception => () }
 
     // contention telemetry rides INSIDE the single driver-facing JSON
@@ -61,11 +86,12 @@ object Bench {
         }
       else runInProcess(names, sfDir, passes)
     val loadPost = loadavg()
-    // merged fanout-audit report — parent only: children contribute
-    // lines to the shared file as they run, and embedding the
-    // accumulated file in a child's record would double-count its
-    // predecessors' findings
-    val fanoutLines = if (isChild) Seq.empty else readFanoutLines()
+    // merged audit + profile report — parent only: children
+    // contribute lines to the shared file as they run, and embedding
+    // the accumulated file in a child's record would double-count its
+    // predecessors' lines
+    val (profileLines, fanoutLines) =
+      (if (isChild) Seq.empty else readRunLines()).partition(_.startsWith(ProfileLine))
 
     // FULL record (complete query names, float seconds, verbose
     // contention) goes to the on-disk self-record: it is what the fork
@@ -84,9 +110,11 @@ object Bench {
     val fanoutFull =
       if (fanoutLines.isEmpty) ""
       else s""""fanout":[${fanoutLines.take(20).mkString(",")}],"""
+    val profileFull =
+      if (profileLines.isEmpty) "" else s""""profile":${profileLines.mkString("[", ",", "]")},"""
     val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s"""${provenanceJson(results.size)},"queries":$qs,""" +
-      s"""$fanoutFull"contention":$contention,"sf":"$sfDir"}"""
+      s"""$fanoutFull$profileFull"contention":$contention,"sf":"$sfDir"}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench_self.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes("UTF-8"))
@@ -126,13 +154,14 @@ object Bench {
       }
     } catch { case _: Exception => "unknown" }
 
-  /** Shared (parent-cleared, child-appended) fanout-violation file. */
-  private def fanoutPath: String =
+  /** Shared (parent-cleared, child-appended) file of audit-violation
+    * and profile lines. */
+  private def runFilePath: String =
     sys.env.getOrElse("SPARK_GRAFT_FANOUT_OUT", "/tmp/bench_fanout.jsonl")
 
-  private def readFanoutLines(): Seq[String] =
+  private def readRunLines(): Seq[String] =
     try {
-      val p = java.nio.file.Paths.get(fanoutPath)
+      val p = java.nio.file.Paths.get(runFilePath)
       if (java.nio.file.Files.exists(p)) {
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
@@ -259,85 +288,207 @@ object Bench {
     names.map(n => n -> code(n, ext(n))).toMap
   }
 
-  /** Warmup + timed medians for `names` in THIS JVM. */
+  /** Warmup + timed medians for `names` in a session of THIS JVM; its
+    * violation and profile lines are appended to the shared run file. */
   private def runInProcess(names: Seq[String], sfDir: String,
       passes: Int): Seq[(String, Double)] = {
     val spark = GraftSession.local()
+    val (results, lines) = timeGates(spark, names, sfDir, passes)
+    spark.stop()
+    if (lines.nonEmpty)
+      try java.nio.file.Files.write(java.nio.file.Paths.get(runFilePath),
+        (lines.mkString("\n") + "\n").getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
+      catch { case e: Exception => System.err.println(s"[bench] run record failed: $e") }
+    results
+  }
 
+  /** Warmup, then `passes` timed runs per gate in `spark`: each gate's
+    * median seconds (-1 = failed), plus one JSON line per profiled gate
+    * (its last timed pass) and per cardinality-audit violation. The
+    * listeners are removed again; the session stays open. */
+  private[graft] def timeGates(spark: SparkSession, names: Seq[String],
+      sfDir: String, passes: Int): (Seq[(String, Double)], Seq[String]) = {
+    val sc = spark.sparkContext
     // runtime cardinality audit (join fanout + generate fanout +
     // exchange skew): a session listener sees EVERY execution —
     // including the fuzz harnesses' inner spark.sql frames, where the
     // fz28 first-cut near-cartesian actually lived and where a
-    // frame-level audit on the gate's outer fingerprint can't look.
-    // Per-arm bound/floor are env-tunable; a bound <= 0 disables that
-    // arm, join bound <= 0 disables the listener outright (kept as
-    // the historical kill switch).
-    val fanoutBound = sys.env.getOrElse("SPARK_GRAFT_FANOUT_BOUND",
-      plans.JoinFanoutAudit.DefaultRatioBound.toString).toDouble
-    val auditCfg = plans.CardinalityAudit.Config(
-      joinBound = fanoutBound,
-      joinMinRows = sys.env.getOrElse("SPARK_GRAFT_FANOUT_MINROWS",
-        plans.JoinFanoutAudit.DefaultMinRows.toString).toLong,
-      generateBound = sys.env.getOrElse("SPARK_GRAFT_GEN_BOUND",
-        plans.CardinalityAudit.GenerateRatioBound.toString).toDouble,
-      generateMinRows = sys.env.getOrElse("SPARK_GRAFT_GEN_MINROWS",
-        plans.CardinalityAudit.GenerateMinRows.toString).toLong,
-      skewBound = sys.env.getOrElse("SPARK_GRAFT_SKEW_BOUND",
-        plans.CardinalityAudit.SkewRatioBound.toString).toDouble,
-      skewMinBytes = sys.env.getOrElse("SPARK_GRAFT_SKEW_MINBYTES",
-        plans.CardinalityAudit.SkewMinBytes.toString).toLong)
-    val fanoutListener =
-      if (fanoutBound > 0) {
-        val l = new plans.CardinalityAudit.Listener(auditCfg)
-        spark.listenerManager.register(l)
-        Some(l)
-      } else None
-
-    def exec(name: String): Double = {
-      fanoutListener.foreach(_.gate = name)
-      val t0 = System.nanoTime()
-      val t = try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        -1.0
+    // frame-level audit on the gate's outer fingerprint can't look
+    val audit = new plans.CardinalityAudit.Listener()
+    val profiler = new Profiler
+    spark.listenerManager.register(audit)
+    spark.listenerManager.register(profiler)
+    sc.addSparkListener(profiler)
+    try {
+      var spans = (0L, 0L) // (construct, write) ns of the last pass
+      def exec(name: String, profiled: Boolean): Double = {
+        audit.gate = name
+        // the profiled pass's jobs carry "<gate> <phase>"; DriverPool
+        // threads inherit the local property
+        def phase(p: String): Unit =
+          if (profiled) sc.setLocalProperty(Profiler.Tag, s"$name $p")
+        phase("construct")
+        val t0 = System.nanoTime()
+        val t = try {
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          val t1 = System.nanoTime()
+          phase("exec")
+          df.write.format("noop").mode("overwrite").save()
+          val t2 = System.nanoTime()
+          spans = (t1 - t0, t2 - t1)
+          (t2 - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          -1.0
+        } finally sc.setLocalProperty(Profiler.Tag, null)
+        // query isolation: no cached block outlives its query
+        spark.catalog.clearCache()
+        t
       }
-      // query isolation: no cached block outlives its query
-      spark.catalog.clearCache()
-      t
+
+      def median(ts: Seq[Double]): Double = {
+        val ok = ts.filter(_ >= 0)
+        if (ok.isEmpty) -1.0 else ok.sorted.apply(ok.size / 2)
+      }
+
+      names.foreach(exec(_, profiled = false)) // warmup
+      val timed = names.map { n =>
+        val ts = (1 to passes).map(i => exec(n, profiled = i == passes))
+        val pass = profiler.drain(sc).filter(p => p.gate == n && ts.last >= 0)
+        pass.foreach(p => System.err.println(p.line(spans)))
+        (n -> median(ts), pass.map(_.json(spans)))
+      }
+      // every gate's pass ended in a drain, so the audit has seen every
+      // execution; violations join the profile lines in the run file
+      val violations = audit.snapshot.map { case (gate, f) => f.json(gate) }
+      violations.foreach(ln => System.err.println(s"[bench] CARDINALITY VIOLATION $ln"))
+      (timed.map(_._1), timed.flatMap(_._2) ++ violations)
+    } finally {
+      spark.listenerManager.unregister(audit)
+      spark.listenerManager.unregister(profiler)
+      sc.removeSparkListener(profiler)
+    }
+  }
+
+  /** Start of every profile line in the run file. */
+  private val ProfileLine = "{\"kind\":\"profile\""
+
+  /** One profiled pass of one gate, filled on the listener-bus thread. */
+  private[graft] final class Pass(val gate: String) {
+    var constructJobs, jobs, maxJoinRows, maxGenerateRows = 0L
+    val stagePhase = mutable.Map[Int, String]()
+    val stages = mutable.ArrayBuffer[(Long, String)]() // (wall ms, record)
+    val shape = mutable.Map[String, Long]().withDefaultValue(0L)
+    var phases = Map.empty[String, Long]
+
+    def add(qe: QueryExecution): Unit = {
+      plans.CardinalityAudit.planShape(qe).foreach { case (k, n) => shape(k) += n }
+      plans.CardinalityAudit.measurements(qe).foreach { f =>
+        if (f.kind == "join") maxJoinRows = math.max(maxJoinRows, f.out)
+        if (f.kind == "generate") maxGenerateRows = math.max(maxGenerateRows, f.out)
+      }
+      // the write is the pass's last execution to end
+      phases = qe.tracker.phases.map { case (k, v) => k -> v.durationMs }
     }
 
-    def median(ts: Seq[Double]): Double = {
-      val ok = ts.filter(_ >= 0)
-      if (ok.isEmpty) -1.0 else ok.sorted.apply(ok.size / 2)
+    /** Scalar fields; exec = the write minus its planning phases. */
+    private def fields(spans: (Long, Long)): Seq[(String, Long)] = {
+      val planning = Seq("analysis", "optimization", "planning")
+        .map(k => s"${k}_ms" -> phases.getOrElse(k, 0L))
+      Seq("construct_ms" -> spans._1 / 1000000, "construct_jobs" -> constructJobs) ++
+        planning ++ Seq(
+          "exec_ms" -> math.max(0L, spans._2 / 1000000 - planning.map(_._2).sum),
+          "jobs" -> jobs, "stage_count" -> stages.size.toLong,
+          "max_join_rows" -> maxJoinRows, "max_generate_rows" -> maxGenerateRows)
     }
 
-    names.foreach(exec) // warmup
-    val results = names.map(n => n -> median((1 to passes).map(_ => exec(n))))
-    // stop() drains the listener bus, so the snapshot read after it is
-    // complete; violations append to the shared run file as JSON lines
-    spark.stop()
-    fanoutListener.foreach { l =>
-      val lines = l.snapshot.map { case (gate, f) =>
-        def esc(s: String) = Option(s).getOrElse("")
-          .replace("\\", "\\\\").replace("\"", "\\\"")
-        s"""{"gate":"${esc(gate)}","kind":"${esc(f.kind)}","node":"${esc(f.node)}",""" +
-          s""""detail":"${esc(f.detail)}","out":${f.out},""" +
-          s""""base":${f.base},"ratio":${math.round(f.ratio * 10) / 10.0}}"""
-      }
-      if (lines.nonEmpty) {
-        lines.foreach(ln => System.err.println(s"[bench] CARDINALITY VIOLATION $ln"))
-        try java.nio.file.Files.write(java.nio.file.Paths.get(fanoutPath),
-          (lines.mkString("\n") + "\n").getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-        catch { case e: Exception =>
-          System.err.println(s"[bench] fanout record failed: $e") }
-      }
+    private def shapeFields = plans.CardinalityAudit.ShapeOps.map(k => k -> shape(k))
+
+    def json(spans: (Long, Long)): String = {
+      def kvs(xs: Seq[(String, Long)]) = xs.map { case (k, v) => s""""$k":$v""" }.mkString(",")
+      val top = stages.sortBy(-_._1).take(Profiler.TopStages).map(_._2)
+      s"""$ProfileLine,"gate":${Json.str(gate)},${kvs(fields(spans))},""" +
+        s""""shape":{${kvs(shapeFields)}},"stages":${top.mkString("[", ",", "]")}}"""
     }
-    results
+
+    def line(spans: (Long, Long)): String =
+      (s"[profile] $gate" +: (fields(spans) ++ shapeFields).map { case (k, v) => s"$k=$v" })
+        .mkString(" ")
+  }
+
+  /** Attributes one profiled pass's jobs, stages and executions to its
+    * gate. Jobs and stages carry the pass's [[Profiler.Tag]] local
+    * property. Executions end on the same listener-bus queue as the job
+    * events, in posting order, so every execution that ends between
+    * the pass's first tagged job and the drain marker belongs to the
+    * pass. All callbacks run on that one bus thread; a closed pass
+    * reaches the driver through `closed`. */
+  private[graft] final class Profiler extends SparkListener with QueryExecutionListener {
+    private var open: Pass = _
+    private val closed = new LinkedBlockingQueue[(String, Option[Pass])]()
+
+    private def tag(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(q => Option(q.getProperty(Profiler.Tag)))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      tag(e.properties).foreach { t =>
+        if (t.startsWith(Profiler.Marker)) { closed.put(t -> Option(open)); open = null }
+        else {
+          val Array(gate, phase) = t.split(" ", 2)
+          if (open == null || open.gate != gate) open = new Pass(gate)
+          if (phase == "construct") open.constructJobs += 1 else open.jobs += 1
+        }
+      }
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      if (open != null) tag(e.properties).foreach(t =>
+        open.stagePhase(e.stageInfo.stageId) = t.split(" ", 2).last)
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (open != null) open.stagePhase.remove(e.stageInfo.stageId).foreach { phase =>
+        val i = e.stageInfo
+        val wall = (for (s <- i.submissionTime; c <- i.completionTime) yield c - s)
+          .getOrElse(-1L)
+        val site = i.details.linesIterator.map(_.trim)
+          .find(l => l.startsWith("graft.") && !l.startsWith("graft.Bench"))
+          .getOrElse(i.name.linesIterator.nextOption().getOrElse("")).take(90)
+        val m = Option(i.taskMetrics)
+        def metric(f: org.apache.spark.executor.TaskMetrics => Long) = m.map(f).getOrElse(0L)
+        open.stages += wall -> (s"""{"id":${i.stageId},"phase":"$phase","wall_ms":$wall,""" +
+          s""""tasks":${i.numTasks},"run_ms":${metric(_.executorRunTime)},""" +
+          s""""cpu_ms":${metric(_.executorCpuTime) / 1000000},""" +
+          s""""shuffle_read_bytes":${metric(_.shuffleReadMetrics.totalBytesRead)},""" +
+          s""""shuffle_write_bytes":${metric(_.shuffleWriteMetrics.bytesWritten)},""" +
+          s""""spill_bytes":${metric(t => t.memoryBytesSpilled + t.diskBytesSpilled)},""" +
+          s""""site":${Json.str(site)}}""")
+      }
+
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (open != null)
+        try open.add(qe) catch { case _: Exception => () } // never fail the run
+
+    override def onFailure(funcName: String, qe: QueryExecution,
+        exception: Exception): Unit = ()
+
+    /** Posts a zero-task marker job and waits (bounded) until the bus
+      * delivers it: the pass that was open then is complete. */
+    def drain(sc: SparkContext): Option[Pass] = {
+      val id = Profiler.Marker + java.util.UUID.randomUUID()
+      sc.setLocalProperty(Profiler.Tag, id)
+      try sc.emptyRDD[Int].count() finally sc.setLocalProperty(Profiler.Tag, null)
+      val got = Iterator.continually(closed.poll(60, TimeUnit.SECONDS))
+        .takeWhile(_ != null).collectFirst { case (`id`, pass) => pass }
+      if (got.isEmpty) System.err.println("[bench] listener bus did not drain within 60 s")
+      got.flatten
+    }
+  }
+
+  private[graft] object Profiler {
+    val Tag = "graft.bench.profile"
+    val Marker = "marker "
+    val TopStages = 5
   }
 
   /** 1-minute system load average from /proc/loadavg (-1 where
@@ -395,7 +546,7 @@ object Bench {
     // retry/fallback path, not an indefinite silent hang of the parent
     // — generous for a ≤forkEvery-query group (whole 125-query rounds
     // finish in ~2 min)
-    val timeoutMin = sys.env.getOrElse("SPARK_GRAFT_FORK_TIMEOUT_MIN", "30").toLong
+    val timeoutMin = 30L
     val exit = try {
       val p = pb.start()
       if (p.waitFor(timeoutMin, java.util.concurrent.TimeUnit.MINUTES))

@@ -37,7 +37,7 @@ object ScalingProbe {
   /** The ten most expensive gates of the round-6 guarded self-bench,
     * plus the round-7 document-table additions (their inputs scale in
     * the synthesized corpus; gates over unscaled tables would measure
-    * nothing). SPARK_GRAFT_PROBE_ONLY=q_a,q_b narrows a run. */
+    * nothing). SPARK_GRAFT_ONLY=q_a,q_b narrows a run (as in Bench and Verify). */
   val Gates: Seq[String] = Seq(
     "q_dd8_semantic_dedup", "q_llm1_corpus_curation", "q_dd2_minhash_lsh",
     "q_dd4_ngram_jaccard", "q_dd6_multitable_lsh", "q_llm2_training_export",
@@ -80,20 +80,11 @@ object ScalingProbe {
     val spark = GraftSession.local()
     synthesize(spark, sfDir, bigDir)
 
-    def exec(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      t
-    }
-    def timed(name: String, dir: String): Double = {
-      exec(name, dir) // warmup: JIT + train-once artifact fill
-      math.min(exec(name, dir), exec(name, dir))
-    }
+    def timedF(build: () => DataFrame): Double = bestOfTwo(spark, build)
+    def timed(name: String, dir: String): Double =
+      timedF(() => SparkEntry.queries(name)(spark, dir))
 
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY").map(_.split(",").toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val rows = Gates.filter(g => only.forall(_.contains(g))).map { g =>
       val tSf = timed(g, sfDir)
       val tBig = timed(g, bigDir)
@@ -105,22 +96,13 @@ object ScalingProbe {
     // the GATE pins k = 8 at every sf for oracle determinism, which is
     // quadratic in cell size when N grows 10× — this row measures the
     // production configuration instead
-    def dd8(dir: String, k: Int): Double = {
-      val t0 = System.nanoTime()
+    def dd8(dir: String, k: Int): () => DataFrame = () =>
       graft.operators.SemanticDedup.dedup(spark,
-          Tables.embeddings(spark, dir), k, 2, 0.5, 7, 20,
-          codebookKey = Some(s"semdedup-probe|$k|$dir"), codebookSrcDir = dir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      t
-    }
-    val kRow = if (only.forall(_.contains("q_dd8_semantic_dedup"))) {
-      dd8(bigDir, 80) // warmup + codebook artifact fill
-      val tSf = { dd8(sfDir, 8); math.min(dd8(sfDir, 8), dd8(sfDir, 8)) }
-      val tBig = math.min(dd8(bigDir, 80), dd8(bigDir, 80))
-      Seq(row("q_dd8 with k∝N (8→80)", tSf, tBig))
-    } else Seq.empty
+        Tables.embeddings(spark, dir), k, 2, 0.5, 7, 20,
+        codebookKey = Some(s"semdedup-probe|$k|$dir"), codebookSrcDir = dir)
+    val kRow = if (only.forall(_.contains("q_dd8_semantic_dedup")))
+      Seq(row("q_dd8 with k∝N (8→80)", timedF(dd8(sfDir, 8)), timedF(dd8(bigDir, 80))))
+    else Seq.empty
 
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_PROBE_SMALL", "/root/testdata/sf0.01")
     val realRows = RealStepGates.filter(g => only.forall(_.contains(g))).map { g =>
@@ -132,16 +114,6 @@ object ScalingProbe {
     // graph-family rows: the gates pin a fixed orderkey slice (their
     // input is bounded by the slice, not the table), so the honest 10×
     // knob is the SLICE — same sf0.1 table, 10× the subgraph
-    def timedF(build: () => DataFrame): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        build().write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        t
-      }
-      once(); math.min(once(), once())
-    }
     def graphEdges(slice: Long, foldParts: Option[Long]): DataFrame = {
       val part = foldParts match {
         case Some(m) => col("l_partkey") % m + 1000000L
@@ -206,20 +178,11 @@ object ScalingProbe {
     synthesize(spark, sfDir, bigDir) // decade 1 must exist
     synthesizeDecade2(spark, sfDir, bigDir, big2Dir)
 
-    def once(build: () => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      build().write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      t
-    }
-    def timedF(build: () => DataFrame): Double = {
-      once(build); math.min(once(build), once(build))
-    }
+    def timedF(build: () => DataFrame): Double = bestOfTwo(spark, build)
     def gate(name: String, dir: String): () => DataFrame =
       () => SparkEntry.queries(name)(spark, dir)
 
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY").map(_.split(",").toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     def want(g: String) = only.forall(_.contains(g))
 
     var rows = Seq.empty[(String, Double, Double, Double, Double)]
@@ -412,21 +375,11 @@ object ScalingProbe {
       java.nio.file.Files.writeString(marker, s"from $big2Dir x$Step (documents only)\n")
     }
 
-    def once(build: () => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      build().write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      // finished-shuffle files are dropped by the ContextCleaner only
-      // after the shuffle objects are GC'd — at this corpus size the
-      // lingering spill of earlier runs is what filled the disk
-      System.gc()
-      Thread.sleep(3000)
-      t
-    }
-    def timedF(build: () => DataFrame): Double = {
-      once(build); math.min(once(build), once(build))
-    }
+    // finished-shuffle files are dropped by the ContextCleaner only
+    // after the shuffle objects are GC'd — at this corpus size the
+    // lingering spill of earlier runs is what filled the disk
+    def timedF(build: () => DataFrame): Double =
+      bestOfTwo(spark, build, () => { System.gc(); Thread.sleep(3000) })
     def gate(dir: String): () => DataFrame =
       () => SparkEntry.queries("q_dd4_ngram_jaccard")(spark, dir)
 
@@ -436,6 +389,22 @@ object ScalingProbe {
     println(f"[scaling] dd4 2x-step exponent (log2 ratio) = ${math.log(tB / tA) / math.log(2)}%.2f")
     writeMd(outMd, big2Dir, big3Dir, Seq(r))
     spark.stop()
+  }
+
+  /** One warmup (JIT + train-once artifact fill), then the faster of
+    * two timed noop writes of `build`; the cache is cleared (and
+    * `afterEach` run) after every write. */
+  private def bestOfTwo(spark: SparkSession, build: () => DataFrame,
+      afterEach: () => Unit = () => ()): Double = {
+    def once(): Double = {
+      val t0 = System.nanoTime()
+      build().write.format("noop").mode("overwrite").save()
+      val t = (System.nanoTime() - t0) / 1e9
+      spark.catalog.clearCache()
+      afterEach()
+      t
+    }
+    once(); math.min(once(), once())
   }
 
   private def row(g: String, tSf: Double, tBig: Double) = {

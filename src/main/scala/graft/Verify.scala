@@ -30,33 +30,17 @@ object Verify {
       }
       spark.catalog.clearCache() // no cached block outlives its query
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop() // drains the listener bus — the snapshot below is complete
     val bad = fanout.snapshot
     if (bad.nonEmpty) {
       bad.foreach { case (g, f) =>
         System.err.println(s"[verify] CARDINALITY VIOLATION ($g) ${f.render}") }
-      // the same escape q() applies: a gate tag can be null (violation
-      // landed outside any gate window) and a rendered detail can carry
-      // quotes from a generated expression — both must stay valid JSON
+      // one record per line, the shape Bench's self-record carries
       try Files.writeString(Paths.get("/tmp/verify_fanout.jsonl"),
-        bad.map { case (g, f) =>
-          s"""{"gate":${q(Option(g).getOrElse(""))},"detail":${q(f.render)}}""" }
-          .mkString("", "\n", "\n"))
+        bad.map { case (g, f) => f.json(g) }.mkString("", "\n", "\n"))
       catch { case _: Exception => () }
     }
   }

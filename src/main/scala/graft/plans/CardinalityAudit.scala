@@ -3,7 +3,9 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Runtime CARDINALITY audit over the three blowup classes that are
@@ -60,6 +62,11 @@ object CardinalityAudit {
     def ratio: Double = out.toDouble / math.max(1L, base).toDouble
     def render: String =
       f"[$kind] $node($detail): out=$out base=$base ratio=$ratio%.1f"
+    /** This finding as one JSON line, tagged with its gate. */
+    def json(gate: String): String =
+      s"""{"gate":${graft.Json.str(gate)},"kind":${graft.Json.str(kind)},""" +
+        s""""node":${graft.Json.str(node)},"detail":${graft.Json.str(detail)},""" +
+        s""""out":$out,"base":$base,"ratio":${math.round(ratio * 10) / 10.0}}"""
   }
 
   /** Generate-arm trip line: the corpus's legitimate exploders top
@@ -93,8 +100,7 @@ object CardinalityAudit {
     * sf0.1's lineitem is ~50 MB in one partition), so the arm is
     * live at bench scale with zero false fires; inherently-bounded
     * post-partial-agg exchanges (q_lm3's buckets) never reach it at
-    * any sf because their bytes don't grow with data. Env-tunable in
-    * Bench for larger deployments. */
+    * any sf because their bytes don't grow with data. */
   val SkewMinBytes: Long = 4L * 1024 * 1024
 
   /** Non-empty partitions required before imbalance is measurable. */
@@ -171,6 +177,36 @@ object CardinalityAudit {
       case other => other.children.flatMap(collectShuffleStages)
     }
 
+  // ---- plan shape ----
+
+  /** The operators [[planShape]] counts. */
+  val ShapeOps: Seq[String] = Seq("Exchange", "SortMergeJoin",
+    "ShuffledHashJoin", "BroadcastHashJoin", "InMemoryTableScan", "Generate")
+
+  /** How many of each [[ShapeOps]] operator an executed plan holds, read
+    * through its AQE-final query stages. A reused exchange counts once,
+    * at the stage that computed it. Every key is present. */
+  def planShape(qe: QueryExecution): Map[String, Int] = {
+    def walk(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case other =>
+        val op = other match {
+          case _: Exchange => Some("Exchange")
+          case _: SortMergeJoinExec => Some("SortMergeJoin")
+          case _: ShuffledHashJoinExec => Some("ShuffledHashJoin")
+          case _: BroadcastHashJoinExec => Some("BroadcastHashJoin")
+          case _: InMemoryTableScanExec => Some("InMemoryTableScan")
+          case _: GenerateExec => Some("Generate")
+          case _ => None
+        }
+        op.toSeq ++ other.children.flatMap(walk)
+    }
+    val ops = walk(qe.executedPlan)
+    ShapeOps.map(k => k -> ops.count(_ == k)).toMap
+  }
+
   // ---- unified surface ----
 
   /** All three arms' raw measurements for one executed frame (no
@@ -188,9 +224,6 @@ object CardinalityAudit {
 
   def violations(df: DataFrame): Seq[Finding] =
     violations(df.queryExecution, Config())
-
-  def violations(df: DataFrame, cfg: Config): Seq[Finding] =
-    violations(df.queryExecution, cfg)
 
   private def trips(f: Finding, cfg: Config): Boolean = f.kind match {
     case "join" => cfg.joinBound > 0 &&

@@ -29,6 +29,17 @@ class CardinalityAuditSpec extends SparkSpec {
     df
   }
 
+  test("a finding's JSON line escapes quotes, backslashes and control chars") {
+    // a generate finding's detail is generator.sql, whose string
+    // literals keep raw tabs and newlines
+    val detail = "split(\"a\\b\", '\t')\nx"
+    val line = CardinalityAudit.Finding("generate", "Generate", detail, 5L, 1L).json("q_x")
+    assert(!line.contains("\n") && !line.contains("\t"), line)
+    val rec = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(rec.get("detail").asText == detail)
+    assert(rec.get("gate").asText == "q_x" && rec.get("out").asLong == 5L)
+  }
+
   test("planted 30kb char-split explode trips the generate arm at default bounds") {
     val df = materialize(orders.limit(10)
       .select(explode(split(repeat(lit("ACGT"), 7500), "")).as("ch")))

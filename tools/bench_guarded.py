@@ -7,12 +7,13 @@ the artifact itself. (Dev tooling only — the shipped library has no
 Python deps.)
 
 Usage: python3 tools/bench_guarded.py <sfDir> <outJson> [cpus]
+(cpus defaults to the host's core count.)
 """
 import json, os, subprocess, sys
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/bench_guarded.json"
-cpus = sys.argv[3] if len(sys.argv) > 3 else "32"
+cpus = sys.argv[3] if len(sys.argv) > 3 else str(len(os.sched_getaffinity(0)))
 
 
 def loadavg():
@@ -46,8 +47,11 @@ post_load, post_jvms = loadavg(), jvms()
 
 rec = json.load(open(bench_json))
 # both snapshots run while no bench JVM is alive: pre before sbt
-# starts, post after it exits — any nonzero count is a FOREIGN jvm
-rec["contention"] = {"loadavg_pre": pre_load, "loadavg_post": post_load,
-                     "jvms_pre": pre_jvms, "jvms_post": post_jvms}
+# starts, post after it exits — any nonzero count is a FOREIGN jvm.
+# They join Bench's own block (passes, fork_every, forks), which the
+# guard's 1/5/15-min loadavg triples replace the 1-min readings of.
+rec.setdefault("contention", {}).update(
+    {"loadavg_pre": pre_load, "loadavg_post": post_load,
+     "jvms_pre": pre_jvms, "jvms_post": post_jvms})
 json.dump(rec, open(out, "w"))
-print(json.dumps({k: v for k, v in rec.items() if k != "queries"}))
+print(json.dumps({k: v for k, v in rec.items() if k not in ("queries", "profile")}))
