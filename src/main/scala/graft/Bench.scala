@@ -2,9 +2,10 @@ package graft
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable
 
@@ -378,7 +379,7 @@ object Bench {
   /** One profiled pass of one gate, filled on the listener-bus thread. */
   private[graft] final class Pass(val gate: String) {
     var constructJobs, jobs, maxJoinRows, maxGenerateRows = 0L
-    val stagePhase = mutable.Map[Int, String]()
+    val stagePhase = mutable.Map[Int, (String, Option[String])]() // (phase, execution site)
     val stages = mutable.ArrayBuffer[(Long, String)]() // (wall ms, record)
     val shape = mutable.Map[String, Long]().withDefaultValue(0L)
     var phases = Map.empty[String, Long]
@@ -423,19 +424,34 @@ object Bench {
     * property. Executions end on the same listener-bus queue as the job
     * events, in posting order, so every execution that ends between
     * the pass's first tagged job and the drain marker belongs to the
-    * pass. All callbacks run on that one bus thread; a closed pass
+    * pass. A stage's call site is the first graft frame of its own call
+    * site, else of its SQL execution's (stages that AQE submits from
+    * its own threads carry no graft frame), else the execution's short
+    * call site. All callbacks run on that one bus thread; a closed pass
     * reaches the driver through `closed`. */
   private[graft] final class Profiler extends SparkListener with QueryExecutionListener {
     private var open: Pass = _
     private val closed = new LinkedBlockingQueue[(String, Option[Pass])]()
+    private val execSites = mutable.Map[String, String]() // execution id → site, until the marker
 
     private def tag(p: java.util.Properties): Option[String] =
       Option(p).flatMap(q => Option(q.getProperty(Profiler.Tag)))
 
+    private def graftFrame(callSite: String): Option[String] =
+      callSite.linesIterator.map(_.trim)
+        .find(l => l.startsWith("graft.") && !l.startsWith("graft.Bench"))
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        execSites(s.executionId.toString) = graftFrame(s.details).getOrElse(s.description)
+      case _ => ()
+    }
+
     override def onJobStart(e: SparkListenerJobStart): Unit =
       tag(e.properties).foreach { t =>
-        if (t.startsWith(Profiler.Marker)) { closed.put(t -> Option(open)); open = null }
-        else {
+        if (t.startsWith(Profiler.Marker)) {
+          closed.put(t -> Option(open)); open = null; execSites.clear()
+        } else {
           val Array(gate, phase) = t.split(" ", 2)
           if (open == null || open.gate != gate) open = new Pass(gate)
           if (phase == "construct") open.constructJobs += 1 else open.jobs += 1
@@ -443,17 +459,17 @@ object Bench {
       }
 
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      if (open != null) tag(e.properties).foreach(t =>
-        open.stagePhase(e.stageInfo.stageId) = t.split(" ", 2).last)
+      if (open != null) tag(e.properties).foreach { t =>
+        val exec = Option(e.properties.getProperty("spark.sql.execution.id"))
+        open.stagePhase(e.stageInfo.stageId) = (t.split(" ", 2).last, exec.flatMap(execSites.get))
+      }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      if (open != null) open.stagePhase.remove(e.stageInfo.stageId).foreach { phase =>
+      if (open != null) open.stagePhase.remove(e.stageInfo.stageId).foreach { case (phase, execSite) =>
         val i = e.stageInfo
         val wall = (for (s <- i.submissionTime; c <- i.completionTime) yield c - s)
           .getOrElse(-1L)
-        val site = i.details.linesIterator.map(_.trim)
-          .find(l => l.startsWith("graft.") && !l.startsWith("graft.Bench"))
-          .getOrElse(i.name.linesIterator.nextOption().getOrElse("")).take(90)
+        val site = graftFrame(i.details).orElse(execSite).getOrElse(i.name).take(90)
         val m = Option(i.taskMetrics)
         def metric(f: org.apache.spark.executor.TaskMetrics => Long) = m.map(f).getOrElse(0L)
         open.stages += wall -> (s"""{"id":${i.stageId},"phase":"$phase","wall_ms":$wall,""" +
@@ -565,6 +581,10 @@ object Bench {
         -2
       }
     } catch { case _: Exception => -1 }
+    // the child's [profile] lines reach this stderr, as in-process ones do
+    try java.nio.file.Files.lines(log.toPath)
+      .filter(_.startsWith("[profile]")).forEach(l => System.err.println(l))
+    catch { case _: Exception => () }
     val parsed =
       if (exit == 0) parseQueryTimes(outFile).filter(r => group.contains(r._1))
       else Seq.empty

@@ -1,8 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.{EmptyRelationExec, GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, LogicalQueryStage, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -125,7 +125,7 @@ object CardinalityAudit {
     * measured live on q_ul1's lattice explode: out=27,988, child=0).
     * Skip, don't guess — the audit discipline. */
   def generateFanouts(qe: QueryExecution): Seq[Finding] =
-    collectGenerates(qe.executedPlan).flatMap { g =>
+    PlanMetrics.executedNodes(qe.executedPlan).collect { case g: GenerateExec => g }.flatMap { g =>
       val out = g.metrics.get("numOutputRows").map(_.value)
       val in = PlanMetrics.rowsOut(g.child)
       (out, in) match {
@@ -136,14 +136,6 @@ object CardinalityAudit {
       }
     }
 
-  private def collectGenerates(p: SparkPlan): Seq[GenerateExec] = p match {
-    case a: AdaptiveSparkPlanExec => collectGenerates(a.executedPlan)
-    case q: QueryStageExec => collectGenerates(q.plan)
-    case r: ReusedExchangeExec => collectGenerates(r.child)
-    case g: GenerateExec => g +: collectGenerates(g.child)
-    case other => other.children.flatMap(collectGenerates)
-  }
-
   // ---- skew arm ----
 
   /** Every materialized shuffle stage's partition-byte imbalance,
@@ -152,7 +144,8 @@ object CardinalityAudit {
     * detail records the shape. Stages with < [[SkewMinPartitions]]
     * non-empty partitions are skipped — see the scaladoc. */
   def skewStats(qe: QueryExecution): Seq[Finding] =
-    collectShuffleStages(qe.executedPlan)
+    PlanMetrics.executedNodes(qe.executedPlan)
+      .collect { case s: ShuffleQueryStageExec => s }
       .flatMap(s => s.mapStats.map(ms => (ms, s)))
       .distinctBy(_._1.shuffleId)
       .flatMap { case (ms, _) =>
@@ -168,42 +161,24 @@ object CardinalityAudit {
         }
       }
 
-  private def collectShuffleStages(p: SparkPlan): Seq[ShuffleQueryStageExec] =
-    p match {
-      case a: AdaptiveSparkPlanExec => collectShuffleStages(a.executedPlan)
-      case s: ShuffleQueryStageExec => s +: collectShuffleStages(s.plan)
-      case q: QueryStageExec => collectShuffleStages(q.plan)
-      case r: ReusedExchangeExec => collectShuffleStages(r.child)
-      case other => other.children.flatMap(collectShuffleStages)
-    }
-
   // ---- plan shape ----
 
   /** The operators [[planShape]] counts. */
   val ShapeOps: Seq[String] = Seq("Exchange", "SortMergeJoin",
     "ShuffledHashJoin", "BroadcastHashJoin", "InMemoryTableScan", "Generate")
 
-  /** How many of each [[ShapeOps]] operator an executed plan holds, read
-    * through its AQE-final query stages. A reused exchange counts once,
-    * at the stage that computed it. Every key is present. */
+  /** How many of each [[ShapeOps]] operator an executed plan holds
+    * ([[PlanMetrics.executedNodes]]). A reused exchange counts once, at
+    * the stage that computed it. Every key is present. */
   def planShape(qe: QueryExecution): Map[String, Int] = {
-    def walk(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case _: ReusedExchangeExec => Nil
-      case other =>
-        val op = other match {
-          case _: Exchange => Some("Exchange")
-          case _: SortMergeJoinExec => Some("SortMergeJoin")
-          case _: ShuffledHashJoinExec => Some("ShuffledHashJoin")
-          case _: BroadcastHashJoinExec => Some("BroadcastHashJoin")
-          case _: InMemoryTableScanExec => Some("InMemoryTableScan")
-          case _: GenerateExec => Some("Generate")
-          case _ => None
-        }
-        op.toSeq ++ other.children.flatMap(walk)
+    val ops = PlanMetrics.executedNodes(qe.executedPlan, throughReused = false).collect {
+      case _: Exchange => "Exchange"
+      case _: SortMergeJoinExec => "SortMergeJoin"
+      case _: ShuffledHashJoinExec => "ShuffledHashJoin"
+      case _: BroadcastHashJoinExec => "BroadcastHashJoin"
+      case _: InMemoryTableScanExec => "InMemoryTableScan"
+      case _: GenerateExec => "Generate"
     }
-    val ops = walk(qe.executedPlan)
     ShapeOps.map(k => k -> ops.count(_ == k)).toMap
   }
 
@@ -265,8 +240,25 @@ object CardinalityAudit {
   }
 }
 
-/** Shared plan-metric reads for the audit arms. */
+/** Shared plan reads for the audit arms and the plan-shape counter. */
 private[plans] object PlanMetrics {
+  /** Every node of an executed plan, pre-order, read through AQE: the
+    * final plan's query stages, the stages that already ran when AQE
+    * collapsed an empty result into an `EmptyRelation` (they sit in its
+    * logical plan: q_j6_anti_join at sf0.001 ran a broadcast join and a
+    * shuffle its final plan no longer shows) and, with `throughReused`,
+    * the fragment a reused exchange points at. */
+  def executedNodes(p: SparkPlan, throughReused: Boolean = true): Seq[SparkPlan] = {
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case e: EmptyRelationExec => e.logical.collect { case s: LogicalQueryStage => s.physicalPlan }
+      case r: ReusedExchangeExec => if (throughReused) Seq(r.child) else Nil
+      case other => other.children
+    }
+    p +: inner.flatMap(executedNodes(_, throughReused))
+  }
+
   /** Rows a node produced: the nearest descendant with a row metric
     * (the [[JoinFanoutAudit]] traversal, shared). */
   def rowsOut(p: SparkPlan): Option[Long] = p match {

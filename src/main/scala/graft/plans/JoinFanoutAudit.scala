@@ -1,9 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 /** Post-execution EQUI-JOIN FANOUT audit — automating the blowup class
@@ -84,7 +82,9 @@ object JoinFanoutAudit {
     fanouts(df).filter(f => f.outputRows >= minRows && f.ratio > ratioBound)
 
   def fromExecution(qe: QueryExecution): Seq[Fanout] =
-    collectJoins(qe.executedPlan).flatMap { j =>
+    PlanMetrics.executedNodes(qe.executedPlan).collect {
+      case j: BaseJoinExec if j.leftKeys.nonEmpty => j
+    }.flatMap { j =>
       val out = j.metrics.get("numOutputRows").map(_.value)
       val maxIn = j.children.flatMap(PlanMetrics.rowsOut(_)).reduceOption(_ max _)
       (out, maxIn) match {
@@ -95,16 +95,7 @@ object JoinFanoutAudit {
       }
     }
 
-  private def collectJoins(p: SparkPlan): Seq[BaseJoinExec] = p match {
-    case a: AdaptiveSparkPlanExec => collectJoins(a.executedPlan)
-    case q: QueryStageExec => collectJoins(q.plan)
-    case r: ReusedExchangeExec => collectJoins(r.child)
-    case j: BaseJoinExec if j.leftKeys.nonEmpty =>
-      j +: j.children.flatMap(collectJoins)
-    case other => other.children.flatMap(collectJoins)
-  }
-
-  // rows-out reads for join inputs live in PlanMetrics.rowsOut, shared
-  // with the generate arm; the session-wide listener is
+  // the executed-plan walk and the rows-out reads for join inputs live
+  // in PlanMetrics, shared with the other arms; the session-wide listener is
   // CardinalityAudit.Listener, which carries this object as its join arm
 }

@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 
 /** Bench's per-gate profile, built in the shared session (which it
   * must leave open): an iterative gate's checkpoint rounds show up as
-  * construct jobs, a multi-way join's joins show up in the plan shape,
-  * and every stage belongs to exactly one gate. */
+  * construct jobs named by their graft call site, a multi-way join's
+  * joins show up in the plan shape, and every stage belongs to exactly
+  * one gate. */
 class BenchProfileSpec extends SparkSpec {
 
   test("profile: construct jobs, join shape, disjoint stages, valid JSON") {
@@ -22,6 +23,8 @@ class BenchProfileSpec extends SparkSpec {
     val j1 = recs("q_j1_join_multiway")
 
     assert(cc4.get("construct_jobs").asLong > 0, cc4)
+    // checkpoint rounds name the graft operator that ran them
+    assert(cc4.get("stages").elements.asScala.exists(_.get("site").asText.startsWith("graft.")), cc4)
     val joins = Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
       .map(j1.get("shape").get(_).asInt).sum
     assert(joins >= 2, j1)

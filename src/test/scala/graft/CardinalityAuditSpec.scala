@@ -40,6 +40,15 @@ class CardinalityAuditSpec extends SparkSpec {
     assert(rec.get("gate").asText == "q_x" && rec.get("out").asLong == 5L)
   }
 
+  test("plan shape counts the stages an empty-result collapse hides") {
+    // every customer has an order at sf0.001: AQE replaces the anti
+    // join's final plan with an EmptyRelation after its stages ran
+    val qe = materialize(SparkEntry.queries("q_j6_anti_join")(spark, sf0001)).queryExecution
+    assert(qe.executedPlan.toString.contains("EmptyRelation"), qe.executedPlan)
+    val shape = CardinalityAudit.planShape(qe)
+    assert(shape("BroadcastHashJoin") == 1 && shape("Exchange") >= 2, shape)
+  }
+
   test("planted 30kb char-split explode trips the generate arm at default bounds") {
     val df = materialize(orders.limit(10)
       .select(explode(split(repeat(lit("ACGT"), 7500), "")).as("ch")))
