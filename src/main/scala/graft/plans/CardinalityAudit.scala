@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{EmptyRelation, LogicalPlan}
 import org.apache.spark.sql.execution.{EmptyRelationExec, GenerateExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, LogicalQueryStage, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -245,14 +246,19 @@ private[plans] object PlanMetrics {
   /** Every node of an executed plan, pre-order, read through AQE: the
     * final plan's query stages, the stages that already ran when AQE
     * collapsed an empty result into an `EmptyRelation` (they sit in its
-    * logical plan: q_j6_anti_join at sf0.001 ran a broadcast join and a
-    * shuffle its final plan no longer shows) and, with `throughReused`,
-    * the fragment a reused exchange points at. */
+    * logical plan, possibly under an earlier round's `EmptyRelation`:
+    * q_j6_anti_join at sf0.001 ran a broadcast join and a shuffle its
+    * final plan no longer shows, q_llm3_mix_pipeline 18 jobs) and, with
+    * `throughReused`, the fragment a reused exchange points at. */
   def executedNodes(p: SparkPlan, throughReused: Boolean = true): Seq[SparkPlan] = {
+    def ranStages(l: LogicalPlan): Seq[SparkPlan] = l.collect {
+      case s: LogicalQueryStage => Seq(s.physicalPlan)
+      case e: EmptyRelation => ranStages(e.logical)
+    }.flatten
     val inner = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec => Seq(q.plan)
-      case e: EmptyRelationExec => e.logical.collect { case s: LogicalQueryStage => s.physicalPlan }
+      case e: EmptyRelationExec => ranStages(e.logical)
       case r: ReusedExchangeExec => if (throughReused) Seq(r.child) else Nil
       case other => other.children
     }
