@@ -48,8 +48,8 @@ post_load, post_jvms = loadavg(), jvms()
 rec = json.load(open(bench_json))
 # both snapshots run while no bench JVM is alive: pre before sbt
 # starts, post after it exits — any nonzero count is a FOREIGN jvm.
-# They join Bench's own block (passes, fork_every, forks), which the
-# guard's 1/5/15-min loadavg triples replace the 1-min readings of.
+# They join Bench's own block (passes, fork_every, forks); the guard's
+# 1/5/15-min loadavg triples replace Bench's 1-min loadavg_pre/_post.
 rec.setdefault("contention", {}).update(
     {"loadavg_pre": pre_load, "loadavg_post": post_load,
      "jvms_pre": pre_jvms, "jvms_post": post_jvms})
